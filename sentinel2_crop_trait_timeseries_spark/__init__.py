@@ -9,8 +9,9 @@ reconstruction from sparse observations), re-expressed Spark-first:
 - decode: tokens -> irregular ``(source, doc_id, ts, value)`` observations
   (pure column expressions, no shuffle)
 - gap-fill: dose-response-driven reconstruction between observations
-  (vectorized numpy inside ``mapInPandas`` -- one sequence row already
-  holds a full per-doc series, so the per-doc stage needs NO shuffle)
+  (vectorized numpy inside ``mapInArrow`` -- one sequence row already
+  holds a full per-doc series, so the per-doc stage needs NO shuffle;
+  each doc's points return as Arrow lists, exploded JVM-side)
 - rollup: hourly/daily/weekly retention tiers, cascaded re-aggregation
 - compression: Gorilla delta-of-delta timestamps + XOR values
 - manifest: per-partition lineage/metrics, left-anti-join resume

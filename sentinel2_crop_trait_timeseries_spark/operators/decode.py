@@ -129,35 +129,14 @@ def decode_observations_arrow(seq: DataFrame) -> DataFrame:
     the decode must stay inside Catalyst (e.g. under further pushdown
     or in SQL views). Both are NARROW: no shuffle either way.
     """
-    import pandas as pd
-
     from ..operators import gapfill as _g
 
-    def fn(it):
-        for pdf in it:
-            d, hours, vals, _ = _g.decode_batch(pdf)
-            # Categorical -> Arrow dictionary: int codes over the
-            # worker-JVM socket instead of one string pair per obs row,
-            # and integer instead of object gathers (see gapfill.py)
-            src_cat = pd.Categorical(pdf["source"])
-            # factorize: duplicate doc_ids in a batch are legal input
-            did_codes, did_cats = pd.factorize(pdf["doc_id"], sort=False)
-            yield pd.DataFrame(
-                {
-                    "source": pd.Categorical.from_codes(
-                        src_cat.codes[d], categories=src_cat.categories
-                    ),
-                    "doc_id": pd.Categorical.from_codes(
-                        did_codes[d], categories=did_cats
-                    ),
-                    "ts": ((EPOCH_UNIX + hours * 3600) * 1_000_000).astype(
-                        "datetime64[us]"
-                    ),
-                    "value": vals,
-                },
-                copy=False,
-            )
+    def batches(pdf):
+        d, hours, vals, _ = _g.decode_batch(pdf)
+        return [_g._arrow_batch(d, _g._doc_strings(pdf), {
+            "ts": _g._micros(EPOCH_UNIX + hours * 3600), "value": vals,
+        }, lists=False)]
 
-    return seq.mapInPandas(
-        fn, "source string, doc_id string, ts timestamp, value double"
+    return _g._map_chunks(
+        seq, batches, "source string, doc_id string, ts timestamp, value double"
     )

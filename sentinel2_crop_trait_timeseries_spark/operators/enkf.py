@@ -38,7 +38,18 @@ from pyspark.sql import DataFrame
 
 from ..functions.response import PARAMS
 from ..sources.gen import EPOCH_UNIX, splitmix64
-from .gapfill import HOUR, HOURS_PER_PERIOD, _doc_key_hash, _response_lut, decode_batch
+from .gapfill import (
+    HOUR,
+    HOURS_PER_PERIOD,
+    VALUE_SCALE,
+    _dense_batches,
+    _dense_rows,
+    _doc_key_hash,
+    _response_lut,
+    _tier_batches,
+    _tier_rows,
+    decode_batch,
+)
 
 ENKF_SCHEMA = (
     "source string, doc_id string, ts timestamp, value double, "
@@ -182,16 +193,14 @@ def reconstruct_assimilated(seq: DataFrame, curve: str = "asymptotic",
     observations whose assimilated diff is negative
     (/root/reference/src/04_reconstruct_s2_traits.py:481-502) ->
     dose-response interpolation between the surviving assimilated
-    anchors. One narrow mapInPandas; with tiers=True the per-doc
-    hourly/daily/weekly rollups are fused in (still shuffle-free).
+    anchors. One narrow mapInArrow, whose tier or dense rows are
+    assembled and exploded exactly as in ``gapfill_tiers``/``gapfill``;
+    with tiers=True the per-doc hourly/daily/weekly rollups are fused in
+    (still shuffle-free).
 
     Assimilated anchor values are re-quantized through the token codec
     (1e-3), matching the engine's storage precision.
     """
-    from typing import Iterator
-
-    from .gapfill import VALUE_SCALE, gapfill_batch, gapfill_tiers_batch
-
     def rebuild_tokens(res: pd.DataFrame, pdf: pd.DataFrame) -> pd.DataFrame:
         res = res.sort_values(["doc_id", "pos"], kind="mergesort")
         # monotone filter: the reference forces diff=0 for BOTH the first
@@ -222,26 +231,15 @@ def reconstruct_assimilated(seq: DataFrame, curve: str = "asymptotic",
         src = pdf[["doc_id", "source"]].drop_duplicates("doc_id")
         return out.merge(src, on="doc_id")
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for lo in range(0, len(pdf), 4096):
-                chunk = pdf.iloc[lo:lo + 4096]
-                res = enkf_batch(chunk, curve=curve, params=params,
-                                 n_sim=n_sim, obs_unc=obs_unc,
-                                 proc_unc=proc_unc, seed=seed)
-                toks = rebuild_tokens(res, chunk)
-                # outlier filtering belongs BEFORE assimilation
-                # (reference prepare_lai_ts runs pre-EnKF); the anchors
-                # here are already assimilated, so only interpolate
-                if tiers:
-                    yield gapfill_tiers_batch(toks, curve=curve, params=params,
-                                              knockout=knockout, seed=seed,
-                                              outlier_filter=False)
-                else:
-                    yield gapfill_batch(toks, curve=curve, params=params,
-                                        knockout=knockout, seed=seed,
-                                        outlier_filter=False)
+    kernel = _tier_batches if tiers else _dense_batches
 
-    from .gapfill import DENSE_SCHEMA, TIER_SCHEMA
+    def batches(pdf: pd.DataFrame):
+        res = enkf_batch(pdf, curve=curve, params=params, n_sim=n_sim,
+                         obs_unc=obs_unc, proc_unc=proc_unc, seed=seed)
+        # outlier filtering belongs BEFORE assimilation (reference
+        # prepare_lai_ts runs pre-EnKF); the anchors here are already
+        # assimilated, so only interpolate
+        return kernel(rebuild_tokens(res, pdf), curve=curve, params=params,
+                      knockout=knockout, seed=seed, outlier_filter=False)
 
-    return seq.mapInPandas(fn, schema=TIER_SCHEMA if tiers else DENSE_SCHEMA)
+    return (_tier_rows if tiers else _dense_rows)(seq, batches)

@@ -19,7 +19,7 @@ Semantics follow the reference's reconstruction loop
   interpolation.
 
 Execution shape (the scale-critical part): one ``sequences`` row holds a
-full per-doc series, so this runs as ``mapInPandas`` over the sequence
+full per-doc series, so this runs as ``mapInArrow`` over the sequence
 scan — a NARROW op, no shuffle, no groupBy. All math is vectorized
 numpy across the entire Arrow batch (docs are processed flat via
 offset arithmetic, not a Python per-doc loop). The reference processes
@@ -28,16 +28,22 @@ handful of numpy kernels.
 
 Output: dense hourly rows ``(source, doc_id, ts, value, is_obs)`` or,
 fused, the per-doc tier rollups (hourly/daily/weekly) without any
-shuffle at all.
+shuffle at all. The worker returns one Arrow row per doc (per (tier,
+doc) for tiers) whose numeric columns are list arrays built straight
+from the kernel's numpy output; ``inline`` explodes them JVM-side. The
+strings cross the Python/JVM socket once per doc, not once per point.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..functions.response import PARAMS, response_np, temperature_np
 from ..sources.gen import EPOCH_UNIX, VALUE_SCALE, splitmix64
@@ -131,11 +137,9 @@ def decode_batch(pdf: pd.DataFrame):
     g = np.cumsum(dts)
     obs_starts = np.zeros(len(pdf), dtype=np.int64)
     np.cumsum(n_obs[:-1], out=obs_starts[1:]) if len(pdf) > 1 else None
-    base = np.zeros_like(g)
-    if len(pdf):
-        seg_first = obs_starts
-        corr = g[seg_first] - dts[seg_first]  # cumsum before each doc's first obs
-        base = np.repeat(corr, n_obs)
+    # cumsum before each doc's first obs; docs without obs have none
+    has = n_obs > 0
+    base = np.repeat((g - dts)[obs_starts[has]], n_obs[has])
     hours = g - base
     return doc_of_obs, hours, vals, n_obs
 
@@ -269,6 +273,9 @@ def _gapfill_core(pdf: pd.DataFrame, curve: str = "asymptotic",
     feeds both the dense-frame surface (gapfill_batch) and the fused
     tier rollup (gapfill_tiers_batch) without materializing the
     intermediate frame."""
+    if len(pdf) == 0:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, np.zeros(0), np.zeros(0, dtype=bool)
     doc_of_obs, hours, vals, n_obs = decode_batch(pdf)
     key_hash = _doc_key_hash(pdf["doc_id"].to_numpy(), seed)
 
@@ -341,7 +348,10 @@ def _gapfill_core(pdf: pd.DataFrame, curve: str = "asymptotic",
     # (segment x offset) matrix keeps it sequential/bit-exact; the
     # global-cumsum-minus-offset trick loses precision catastrophically
     # when a segment's response range is tiny (wang_engels cold spells))
-    seg_ord = seg - doc_of_hr.astype(np.int64)  # contiguous global segment id
+    # contiguous global segment id: every doc with obs has one segment
+    # fewer than obs (a doc without obs has neither)
+    docs_before = np.cumsum(n_keep > 0) - 1
+    seg_ord = seg - docs_before[doc_of_hr]
     pos = hr - h[seg]  # offset within segment, 0-based
     value = np.empty(total, dtype=np.float64)
     if total:
@@ -402,63 +412,128 @@ def _gapfill_core(pdf: pd.DataFrame, curve: str = "asymptotic",
     return out_doc, out_hr, out_val, out_obs
 
 
+# ---------------------------------------------------------------------
+# Kernel output -> Arrow, and back to rows JVM-side
+# ---------------------------------------------------------------------
+
+def _run_starts(*keys: np.ndarray) -> np.ndarray:
+    """Index where each run of equal consecutive key tuples starts."""
+    if len(keys[0]) == 0:
+        return np.zeros(0, dtype=np.int64)
+    chg = np.zeros(len(keys[0]) - 1, dtype=bool)
+    for k in keys:
+        chg |= k[1:] != k[:-1]
+    return np.concatenate(([0], np.flatnonzero(chg) + 1))
+
+
+def _micros(sec: np.ndarray) -> np.ndarray:
+    return (sec * 1_000_000).astype("datetime64[us]")
+
+
+def _doc_strings(pdf: pd.DataFrame) -> dict[str, pa.Array]:
+    return {c: pa.array(pdf[c], pa.string()) for c in ("source", "doc_id")}
+
+
+def _arrow_batch(doc: np.ndarray, strings: dict[str, pa.Array],
+                 columns: dict[str, np.ndarray], lists: bool) -> pa.RecordBatch:
+    """Kernel arrays -> one Arrow batch: the one place gap-fill, decode
+    and dense output is assembled.
+
+    ``doc[i]`` is the row of element i in each per-doc ``strings`` array;
+    strings are gathered with ``take``, so no per-row Python object is
+    built (pandas Categorical columns would be cast back to per-row
+    strings before Arrow). With ``lists`` each run of equal ``doc``
+    becomes ONE row whose numeric columns are Arrow lists, exploded
+    JVM-side by ``_inline``; without it, one row per element.
+    """
+    if lists:
+        starts = _run_starts(doc)
+        offsets = pa.array(np.append(starts, len(doc)), pa.int32())
+        doc = doc[starts]
+    rows = pa.array(doc)
+    out = {k: v.take(rows) for k, v in strings.items()}
+    for k, v in columns.items():
+        a = pa.array(v)
+        out[k] = pa.ListArray.from_arrays(offsets, a) if lists else a
+    return pa.RecordBatch.from_pydict(out)
+
+
+def _explode(batches: list[pa.RecordBatch]) -> pd.DataFrame:
+    """The rows ``_inline`` makes of ``batches`` on the JVM, as one pandas
+    frame: list columns flattened, the others repeated per element."""
+    flat = []
+    for b in batches:
+        is_list = [pa.types.is_list(t) for t in b.schema.types]
+        lengths = b.column(is_list.index(True)).value_lengths().to_numpy()
+        rows = pa.array(np.repeat(np.arange(b.num_rows), lengths))
+        flat.append(pa.RecordBatch.from_arrays(
+            [c.flatten() if lst else c.take(rows)
+             for c, lst in zip(b.columns, is_list)],
+            names=b.schema.names))
+    return pa.Table.from_batches(flat).to_pandas()
+
+
+def _map_chunks(seq: DataFrame, batches, schema: str) -> DataFrame:
+    """``batches(pdf)`` over CHUNK_DOCS-doc slices of every input batch,
+    as one narrow ``mapInArrow``."""
+    chunk = CHUNK_DOCS
+
+    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            pdf = batch.to_pandas()
+            for lo in range(0, len(pdf), chunk):
+                yield from batches(pdf.iloc[lo:lo + chunk])
+
+    return seq.mapInArrow(fn, schema)
+
+
+def _inline(df: DataFrame, keys: list[str]) -> DataFrame:
+    """JVM-side explode of ``_arrow_batch(lists=True)`` rows: one row per
+    list element, the key columns repeated."""
+    lists = [c for c in df.columns if c not in keys]
+    return df.select(*keys, F.inline(F.arrays_zip(*lists)))
+
+
+# ---------------------------------------------------------------------
+# Dense hourly reconstruction
+# ---------------------------------------------------------------------
+
+_DENSE_LISTS = ("source string, doc_id string, ts array<timestamp>, "
+                "value array<double>, is_obs array<boolean>")
+
+
+def _dense_batches(pdf: pd.DataFrame, **kw) -> list[pa.RecordBatch]:
+    """One Arrow row per doc: its dense hourly points as list columns."""
+    out_doc, out_hr, out_val, out_obs = _gapfill_core(pdf, **kw)
+    return [_arrow_batch(out_doc, _doc_strings(pdf), {
+        "ts": _micros(EPOCH_UNIX + out_hr * HOUR),
+        "value": out_val,
+        "is_obs": out_obs,
+    }, lists=True)]
+
+
+def _dense_rows(seq: DataFrame, batches) -> DataFrame:
+    """``_dense_batches``-shaped output of ``batches`` -> DENSE_SCHEMA."""
+    return _inline(_map_chunks(seq, batches, _DENSE_LISTS), ["source", "doc_id"])
+
+
 def gapfill_batch(pdf: pd.DataFrame, curve: str = "asymptotic",
                   params: dict | None = None, knockout: float = 0.0,
                   outlier_filter: bool = True, seed: int = 42) -> pd.DataFrame:
-    """Gap-fill one Arrow batch of sequence rows -> dense hourly frame."""
-    if len(pdf) == 0:
-        return pd.DataFrame({"source": [], "doc_id": [], "ts": [], "value": [],
-                             "is_obs": []}).astype({"ts": "datetime64[us]"})
-    out_doc, out_hr, out_val, out_obs = _gapfill_core(
+    """Gap-fill one Arrow batch of sequence rows -> dense hourly frame
+    (the rows ``gapfill`` returns for it)."""
+    return _explode(_dense_batches(
         pdf, curve=curve, params=params, knockout=knockout,
-        outlier_filter=outlier_filter, seed=seed)
-    # string columns ride as pandas Categorical -> Arrow DICTIONARY
-    # arrays: the per-doc-constant strings become int32 codes on the
-    # worker->JVM socket (~35 B/row of redundant string bytes dropped —
-    # the dense output is memory-bandwidth-bound end to end) and the
-    # per-row object gathers become integer gathers. Spark reads
-    # dictionary arrays natively as string columns.
-    src_cat = pd.Categorical(pdf["source"])
-    # factorize (not from_codes on the raw column): doc_id values may
-    # legitimately repeat within a batch (e.g. appended tables), and
-    # Categorical categories must be unique
-    did_codes, did_cats = pd.factorize(pdf["doc_id"], sort=False)
-    # copy=False: pandas 2.x keeps each ndarray as its own block —
-    # the default consolidates same-dtype columns into one 2D block,
-    # a full re-copy of the multi-hundred-MB batch output
-    return pd.DataFrame(
-        {
-            "source": pd.Categorical.from_codes(
-                src_cat.codes[out_doc], categories=src_cat.categories
-            ),
-            "doc_id": pd.Categorical.from_codes(
-                did_codes[out_doc], categories=did_cats
-            ),
-            "ts": ((EPOCH_UNIX + out_hr * HOUR) * 1_000_000).astype(
-                "datetime64[us]"
-            ),
-            "value": out_val,
-            "is_obs": out_obs,
-        },
-        copy=False,
-    )
+        outlier_filter=outlier_filter, seed=seed))
 
 
 def gapfill(seq: DataFrame, curve: str = "asymptotic", params: dict | None = None,
             knockout: float = 0.0, outlier_filter: bool = True,
             seed: int = 42) -> DataFrame:
-    """sequences -> dense hourly reconstruction, as a narrow mapInPandas."""
-
-    chunk = CHUNK_DOCS
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for lo in range(0, len(pdf), chunk):
-                yield gapfill_batch(pdf.iloc[lo:lo + chunk], curve=curve,
-                                    params=params, knockout=knockout,
-                                    outlier_filter=outlier_filter, seed=seed)
-
-    return seq.mapInPandas(fn, schema=DENSE_SCHEMA)
+    """sequences -> dense hourly reconstruction, as a narrow mapInArrow."""
+    return _dense_rows(seq, partial(
+        _dense_batches, curve=curve, params=params, knockout=knockout,
+        outlier_filter=outlier_filter, seed=seed))
 
 
 # ---------------------------------------------------------------------
@@ -469,6 +544,11 @@ TIER_SCHEMA = (
     "tier string, source string, doc_id string, bucket_ts timestamp, "
     "n long, sum_value double, mean_value double, min_value double, "
     "max_value double, sumsq_value double"
+)
+_TIER_LISTS = (
+    "tier string, source string, doc_id string, bucket_ts array<timestamp>, "
+    "n array<long>, sum_value array<double>, min_value array<double>, "
+    "max_value array<double>, sumsq_value array<double>"
 )
 
 _DAY = 86400
@@ -502,8 +582,7 @@ def _tier_rollup_np(doc, sec, val):
     )
     # daily: contiguous runs of (doc, day)
     day = (sec // _DAY) * _DAY
-    chg = (doc[1:] != doc[:-1]) | (day[1:] != day[:-1])
-    starts = np.concatenate(([0], np.flatnonzero(chg) + 1))
+    starts = _run_starts(doc, day)
     n_d = np.diff(np.concatenate((starts, [len(day)])))
     d_doc = doc[starts]
     d_sum = np.add.reduceat(val, starts)
@@ -513,8 +592,7 @@ def _tier_rollup_np(doc, sec, val):
     out["daily"] = (d_doc, day[starts], n_d, d_sum, d_min, d_max, d_ss)
     # weekly: compose the daily partials
     week = ((day[starts] + _WEEK_SHIFT) // (7 * _DAY)) * (7 * _DAY) - _WEEK_SHIFT
-    chg2 = (d_doc[1:] != d_doc[:-1]) | (week[1:] != week[:-1])
-    s2 = np.concatenate(([0], np.flatnonzero(chg2) + 1))
+    s2 = _run_starts(d_doc, week)
     out["weekly"] = (
         d_doc[s2],
         week[s2],
@@ -527,69 +605,39 @@ def _tier_rollup_np(doc, sec, val):
     return out
 
 
+def _tier_batches(pdf: pd.DataFrame, **kw) -> list[pa.RecordBatch]:
+    """Gap-fill + per-doc tier rollup of one chunk: one batch per tier,
+    hourly then daily then weekly, each with one row per (tier, doc)."""
+    out_doc, out_hr, val, _ = _gapfill_core(pdf, **kw)
+    tiers = _tier_rollup_np(out_doc, EPOCH_UNIX + out_hr * HOUR, val)
+    strings = _doc_strings(pdf)
+    return [
+        _arrow_batch(doc, {"tier": pa.repeat(tier, len(pdf)), **strings}, {
+            "bucket_ts": _micros(bucket), "n": n, "sum_value": s,
+            "min_value": mn, "max_value": mx, "sumsq_value": ss,
+        }, lists=True)
+        for tier, (doc, bucket, n, s, mn, mx, ss) in tiers.items()
+    ]
+
+
+def _tier_rows(seq: DataFrame, batches) -> DataFrame:
+    """``_tier_batches``-shaped output of ``batches`` -> TIER_SCHEMA; the
+    mean is derived JVM-side (the same IEEE division as numpy's s / n)."""
+    df = _inline(_map_chunks(seq, batches, _TIER_LISTS), ["tier", "source", "doc_id"])
+    mean = (F.col("sum_value") / F.col("n")).alias("mean_value")
+    return df.select(*df.columns[:6], mean, *df.columns[6:])
+
+
 def gapfill_tiers_batch(pdf: pd.DataFrame, curve: str = "asymptotic",
                         params: dict | None = None, knockout: float = 0.0,
                         outlier_filter: bool = True, seed: int = 42) -> pd.DataFrame:
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            {c: [] for c in ["tier", "source", "doc_id", "bucket_ts", "n",
-                             "sum_value", "mean_value", "min_value",
-                             "max_value", "sumsq_value"]}
-        ).astype({"bucket_ts": "datetime64[us]", "n": "int64"})
-    # flat arrays straight from the core — no intermediate dense frame,
-    # no factorize, no datetime round-trip
-    out_doc, out_hr, val, _ = _gapfill_core(
+    """Tier rows of one batch of sequence rows (the rows ``gapfill_tiers``
+    returns for it)."""
+    df = _explode(_tier_batches(
         pdf, curve=curve, params=params, knockout=knockout,
-        outlier_filter=outlier_filter, seed=seed)
-    if len(out_doc) == 0:
-        return pd.DataFrame(
-            {c: [] for c in ["tier", "source", "doc_id", "bucket_ts", "n",
-                             "sum_value", "mean_value", "min_value",
-                             "max_value", "sumsq_value"]}
-        ).astype({"bucket_ts": "datetime64[us]", "n": "int64"})
-    sec = EPOCH_UNIX + out_hr * HOUR
-    doc_src = pdf["source"].to_numpy()
-    doc_did = pdf["doc_id"].to_numpy()
-    tiers = _tier_rollup_np(out_doc, sec, val)
-    # assemble ONE frame (a 3-frame pd.concat re-copies every column)
-    parts = list(tiers.items())
-    di = np.concatenate([p[1][0] for p in parts])
-    bucket = np.concatenate([p[1][1] for p in parts])
-    n = np.concatenate([p[1][2] for p in parts])
-    s = np.concatenate([p[1][3] for p in parts])
-    mn = np.concatenate([p[1][4] for p in parts])
-    mx = np.concatenate([p[1][5] for p in parts])
-    ss = np.concatenate([p[1][6] for p in parts])
-    tier_codes = np.repeat(
-        np.arange(len(parts), dtype=np.int8),
-        [len(p[1][0]) for p in parts],
-    )
-    # Categorical -> Arrow dictionary: tier/source/doc_id strings are
-    # per-doc-constant; int codes over the socket instead of ~35 B/row
-    # of repeated strings, and integer gathers instead of object ones
-    src_cat = pd.Categorical(pd.Series(doc_src))
-    did_codes, did_cats = pd.factorize(pd.Series(doc_did), sort=False)
-    return pd.DataFrame(
-        {
-            "tier": pd.Categorical.from_codes(
-                tier_codes, categories=[t for t, _ in parts]
-            ),
-            "source": pd.Categorical.from_codes(
-                src_cat.codes[di], categories=src_cat.categories
-            ),
-            "doc_id": pd.Categorical.from_codes(
-                did_codes[di], categories=did_cats
-            ),
-            "bucket_ts": (bucket * 1_000_000).astype("datetime64[us]"),
-            "n": n,
-            "sum_value": s,
-            "mean_value": s / n,
-            "min_value": mn,
-            "max_value": mx,
-            "sumsq_value": ss,
-        },
-        copy=False,  # per-column blocks, no consolidation re-copy
-    )
+        outlier_filter=outlier_filter, seed=seed))
+    df.insert(6, "mean_value", df["sum_value"] / df["n"])
+    return df
 
 
 def gapfill_tiers(seq: DataFrame, curve: str = "asymptotic",
@@ -605,14 +653,6 @@ def gapfill_tiers(seq: DataFrame, curve: str = "asymptotic",
     ever shuffle, and those shuffle pre-reduced rollup rows.
     Output is identical to cascade(gapfill(seq)) (tested property).
     """
-    chunk = CHUNK_DOCS
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for lo in range(0, len(pdf), chunk):
-                yield gapfill_tiers_batch(pdf.iloc[lo:lo + chunk], curve=curve,
-                                          params=params, knockout=knockout,
-                                          outlier_filter=outlier_filter,
-                                          seed=seed)
-
-    return seq.mapInPandas(fn, schema=TIER_SCHEMA)
+    return _tier_rows(seq, partial(
+        _tier_batches, curve=curve, params=params, knockout=knockout,
+        outlier_filter=outlier_filter, seed=seed))

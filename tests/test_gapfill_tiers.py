@@ -1,12 +1,18 @@
-"""Fused shuffle-free gapfill_tiers == cascade(gapfill(...)), and is
-invariant under repartitioning."""
+"""Fused shuffle-free gapfill_tiers == cascade(gapfill(...)), is
+invariant under repartitioning, and equals the pandas surfaces."""
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql.types import _parse_datatype_string
 
 from sentinel2_crop_trait_timeseries_spark.operators.gapfill import (
+    DENSE_SCHEMA,
+    TIER_SCHEMA,
     gapfill,
+    gapfill_batch,
     gapfill_tiers,
+    gapfill_tiers_batch,
 )
 from sentinel2_crop_trait_timeseries_spark.operators.rollup import cascade
 from sentinel2_crop_trait_timeseries_spark.sources.gen import generate_sequences
@@ -55,3 +61,41 @@ def test_fused_partition_invariance(spark, seq):
 def test_fused_plan_is_shuffle_free(spark, seq):
     plan = gapfill_tiers(seq)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def _same_rows(got, want):
+    assert list(got.columns) == list(want.columns)
+    assert len(got) == len(want)
+    for c in want.columns:
+        a, b = got[c].to_numpy(), want[c].to_numpy()
+        if np.issubdtype(b.dtype, np.datetime64):
+            a, b = a.astype("datetime64[us]"), b.astype("datetime64[us]")
+        assert np.array_equal(a, b), c
+
+
+def test_array_path_matches_pandas_surfaces_on_edge_docs(spark):
+    """One Arrow batch of awkward docs through the per-doc list path and
+    the JVM-side inline: Spark rows equal the pandas surfaces exactly and
+    in order, mean_value included (the JVM's sum / n and numpy's s / n
+    are the same IEEE division)."""
+    rows = [
+        ("s", "dup", [100, 1000, 30, 1500, 40, 1200], 6),  # duplicated
+        ("s", "dup", [200, 3000, 70, 2500], 4),             # doc_id
+        ("s", "one", [100, 5000], 2),                       # single obs
+        ("s", "none", [], 0),                               # no obs at all
+        ("s", "dup_ts", [100, 1000, 0, 2000], 4),           # zero gap
+        ("t", "many", [5, 800, 90, 1100, 200, 1900, 300, 1700], 8),
+    ]
+    pdf = pd.DataFrame({
+        "source": [r[0] for r in rows],
+        "doc_id": [r[1] for r in rows],
+        "tokens": [np.array(r[2], dtype=np.int32) for r in rows],
+        "n_tok": [r[3] for r in rows],
+    })
+    seq = spark.createDataFrame(pdf).coalesce(1)
+    tiers = gapfill_tiers(seq)
+    dense = gapfill(seq)
+    assert tiers.schema == _parse_datatype_string(TIER_SCHEMA)
+    assert dense.schema == _parse_datatype_string(DENSE_SCHEMA)
+    _same_rows(tiers.toPandas(), gapfill_tiers_batch(pdf))
+    _same_rows(dense.toPandas(), gapfill_batch(pdf))

@@ -5,11 +5,12 @@ degrades a plan fails CI."""
 
 import re
 
+import numpy as np
 import pytest
 
 from sentinel2_crop_trait_timeseries_spark.catalog import QUERIES
 from sentinel2_crop_trait_timeseries_spark.operators.gapfill import gapfill_tiers
-from sentinel2_crop_trait_timeseries_spark.sources.gen import generate_sequences
+from sentinel2_crop_trait_timeseries_spark.sources.gen import gen_batch
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,10 +72,43 @@ def test_rollups_aggregate_map_side(spark):
         assert "partial_" in plan, name
 
 
+def _plan_nodes(plan):
+    """Every node of an executed physical plan, through the adaptive
+    wrapper and its query stages."""
+    nodes, todo = [], [plan]
+    while todo:
+        p = todo.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(p.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(p.plan())
+            continue
+        nodes.append(p)
+        kids = p.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
 def test_fused_tiers_shuffle_free(spark):
-    seq = generate_sequences(spark, 10, partitions=2)
-    plan = gapfill_tiers(seq)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    """The fused tiers are one narrow pass: the kernel's per-(tier, doc)
+    Arrow lists feed an ``inline`` Generate directly, with no shuffle
+    and no pandas row conversion anywhere in the executed plan."""
+    seq = spark.createDataFrame(gen_batch(np.arange(10))).coalesce(2)
+    df = gapfill_tiers(seq)
+    df.collect()
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    names = [n.nodeName() for n in nodes]
+    assert not [n for n in names if "Exchange" in n], names
+    assert "MapInPandas" not in names, names
+    gens = [n for n in nodes if n.nodeName() == "Generate"]
+    assert len(gens) == 1, names
+    assert gens[0].generator().prettyName() == "inline"
+    feed = gens[0].children().apply(0)
+    if feed.nodeName() == "InputAdapter":  # codegen stage boundary
+        feed = feed.child()
+    assert feed.nodeName() == "MapInArrow", names
 
 
 def test_ann_bruteforce_cogroup_cells(spark):
