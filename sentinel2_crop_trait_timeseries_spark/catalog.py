@@ -28,6 +28,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sentinel2_crop_trait_timeseries_spark.operators.rollup import (
+    _bucket_sec,
+    _sec,
+)
+
 # name -> {"fn": callable(spark, sf_dir) -> DataFrame, "sql": str | None}
 QUERIES: dict[str, dict] = {}
 
@@ -71,37 +76,13 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _epoch(col) -> F.Column:
-    """Epoch seconds as BIGINT (truncating micros).
-
-    The driver parquet surfaces TIMESTAMP_NTZ; the wrapper pins the
-    session tz to UTC, so NTZ -> TIMESTAMP -> LONG equals DuckDB's
-    floor(epoch(ts)).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("timestamp").cast("long")
-
-
 def _epoch_frac(col) -> F.Column:
     """Epoch seconds as DOUBLE (including micros)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("timestamp").cast("double")
 
 
-def _bucket(col, width: int) -> F.Column:
-    return (F.floor(_epoch(col) / F.lit(width)) * width).cast("long")
-
-
-_WEEK = 604800
 _DAY = 86400
-
-
-def _week_bucket(col) -> F.Column:
-    # epoch day 0 = Thursday; Monday-aligned week = shift by 3 days
-    day = F.floor(_epoch(col) / F.lit(_DAY))
-    wk_day = F.floor((day + 3) / F.lit(7)) * 7 - 3
-    return (wk_day * _DAY).cast("long")
-
 
 _SQL_HOUR = "cast(floor(floor(epoch(ts))/3600)*3600 as bigint)"
 _SQL_DAY = "cast(floor(floor(epoch(ts))/86400)*86400 as bigint)"
@@ -129,7 +110,8 @@ _SQL_WEEK = (
 )
 def rollup_hourly(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type", _bucket("ts", 3600).alias("bucket_ts")).agg(
+    hour = _bucket_sec(_sec("ts"), 3600)
+    return ev.groupBy("event_type", hour.alias("bucket_ts")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.lit(1e-9) + F.sum("value"), 4).alias("sum_value"),
         F.round(F.lit(1e-9) + F.avg("value"), 4).alias("mean_value"),
@@ -157,14 +139,14 @@ def rollup_daily_cascade(spark, sf_dir):
     daily directly, proving tier consistency)."""
     ev = _t(spark, sf_dir, "events")
     hourly = ev.groupBy(
-        "event_type", _bucket("ts", 3600).alias("hour_ts")
+        "event_type", _bucket_sec(_sec("ts"), 3600).alias("hour_ts")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("value").alias("s"),
         F.min("value").alias("mn"),
         F.max("value").alias("mx"),
     )
-    day = (F.floor(F.col("hour_ts") / _DAY) * _DAY).cast("long")
+    day = _bucket_sec(F.col("hour_ts"), _DAY)
     return hourly.groupBy("event_type", day.alias("bucket_ts")).agg(
         F.sum("n").alias("n"),
         F.round(F.lit(1e-9) + F.sum("s"), 4).alias("sum_value"),
@@ -192,15 +174,14 @@ def rollup_weekly_cascade(spark, sf_dir):
     pure epoch arithmetic so it is timezone-free in both engines)."""
     ev = _t(spark, sf_dir, "events")
     daily = ev.groupBy(
-        "event_type", _bucket("ts", _DAY).alias("day_ts")
+        "event_type", _bucket_sec(_sec("ts"), _DAY).alias("day_ts")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("value").alias("s"),
         F.min("value").alias("mn"),
         F.max("value").alias("mx"),
     )
-    day = F.floor(F.col("day_ts") / _DAY)
-    wk = ((F.floor((day + 3) / 7) * 7 - 3) * _DAY).cast("long")
+    wk = _bucket_sec(F.col("day_ts"), "week")
     return daily.groupBy("event_type", wk.alias("bucket_ts")).agg(
         F.sum("n").alias("n"),
         F.round(F.lit(1e-9) + F.sum("s"), 4).alias("sum_value"),
@@ -229,7 +210,8 @@ def continuous_agg_daily(spark, sf_dir):
     parcel percentile profiles, validation/04_temporal_profiles.py:188-206)."""
     ev = _t(spark, sf_dir, "events")
     v = F.col("value")
-    return ev.groupBy("event_type", _bucket("ts", _DAY).alias("bucket_ts")).agg(
+    day = _bucket_sec(_sec("ts"), _DAY)
+    return ev.groupBy("event_type", day.alias("bucket_ts")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.lit(1e-9) + F.avg(v), 4).alias("mean_value"),
         F.round(F.lit(1e-9) + F.stddev_pop(v), 4).alias("std_value"),
@@ -268,7 +250,7 @@ def error_stats_by_type(spark, sf_dir):
     """One-pass RMSE/MAE/bias/MAPE/NMAD/R2/slope/intercept, all built-in
     aggregates (single whole-stage-codegen agg, map-side partials)."""
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type", _bucket("ts", _DAY))
+    w = Window.partitionBy("event_type", _bucket_sec(_sec("ts"), _DAY))
     p = ev.withColumn("pred", F.avg("value").over(w))
     o, pr = F.col("value"), F.col("pred")
     err = pr - o
@@ -441,7 +423,7 @@ def asof_join_signup(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sig = F.last(
-        F.when(F.col("event_type") == "signup", _epoch("ts")), ignorenulls=True
+        F.when(F.col("event_type") == "signup", _sec("ts")), ignorenulls=True
     ).over(w)
     return (
         ev.withColumn("signup_epoch", sig)
@@ -472,7 +454,7 @@ def tolerance_join(spark, sf_dir):
     e = ev.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("err_id"),
         F.col("user_id").alias("u"),
-        _epoch("ts").alias("e_sec"),
+        _sec("ts").alias("e_sec"),
         _epoch_frac("ts").alias("e_t"),
     )
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -516,15 +498,15 @@ def daily_spine_zerofill(spark, sf_dir):
     (reference: pd.date_range spine, baseline/01_run_baseline_model.py:293-295)."""
     ev = _t(spark, sf_dir, "events")
     b = ev.agg(
-        F.floor(F.min(_epoch("ts")) / _DAY).alias("lo"),
-        F.floor(F.max(_epoch("ts")) / _DAY).alias("hi"),
+        F.floor(F.min(_sec("ts")) / _DAY).alias("lo"),
+        F.floor(F.max(_sec("ts")) / _DAY).alias("hi"),
     )
     days = b.select(
         F.explode(F.sequence("lo", "hi")).alias("d")
     ).select((F.col("d") * _DAY).cast("long").alias("bucket_ts"))
     types = ev.select("event_type").distinct()
     cnt = ev.groupBy(
-        "event_type", _bucket("ts", _DAY).alias("bucket_ts")
+        "event_type", _bucket_sec(_sec("ts"), _DAY).alias("bucket_ts")
     ).agg(F.count(F.lit(1)).alias("c"))
     return (
         days.crossJoin(F.broadcast(types))
@@ -581,8 +563,8 @@ def user_first_last(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
-        F.min(_epoch("ts")).alias("first_epoch"),
-        F.max(_epoch("ts")).alias("last_epoch"),
+        F.min(_sec("ts")).alias("first_epoch"),
+        F.max(_sec("ts")).alias("last_epoch"),
         F.min_by("value", "ts").alias("first_val"),
         F.max_by("value", "ts").alias("last_val"),
     )
@@ -863,7 +845,7 @@ def gapfill_dose_response(spark, sf_dir):
     anchors = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
-            "user_id", F.floor(_epoch("ts") / 3600).cast("long").alias("h")
+            "user_id", F.floor(_sec("ts") / 3600).cast("long").alias("h")
         )
         .agg(F.avg("value").alias("v"))
     )
@@ -944,7 +926,7 @@ def gapfill_linear(spark, sf_dir):
     anchors = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
-            "user_id", F.floor(_epoch("ts") / 3600).cast("long").alias("h")
+            "user_id", F.floor(_sec("ts") / 3600).cast("long").alias("h")
         )
         .agg(F.avg("value").alias("v"))
     )
@@ -1063,7 +1045,7 @@ def gapfill_wang_engels(spark, sf_dir):
     anchors = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
-            "user_id", F.floor(_epoch("ts") / 3600).cast("long").alias("h")
+            "user_id", F.floor(_sec("ts") / 3600).cast("long").alias("h")
         )
         .agg(F.avg("value").alias("v"))
     )
@@ -1168,7 +1150,7 @@ def gapfill_asymptotic_daily(spark, sf_dir):
     anchors = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
-            "user_id", F.floor(_epoch("ts") / 86400).cast("long").alias("d")
+            "user_id", F.floor(_sec("ts") / 86400).cast("long").alias("d")
         )
         .agg(F.avg("value").alias("v"))
     )
@@ -1370,7 +1352,7 @@ def scalar_surface_outer(spark, sf_dir):
     geometry-snap shape, round(x/g)*g), and the side-presence flag
     decoded through a create_map literal lookup."""
     ev = _t(spark, sf_dir, "events")
-    day = F.floor(_epoch("ts") / 86400).cast("long").alias("d")
+    day = F.floor(_sec("ts") / 86400).cast("long").alias("d")
     # grid snap: round(sum/0.5)*0.5, with the house rounding guard
     spend_bin = (
         F.round(F.lit(1e-9) + F.round(F.lit(1e-9) + F.sum("value"), 6) * 2, 0) / 2
@@ -1710,7 +1692,7 @@ def kernel_smooth_events(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     h = _SMOOTH_H
     e = ev.select(
-        "user_id", "event_id", _epoch("ts").alias("sec"), "value"
+        "user_id", "event_id", _sec("ts").alias("sec"), "value"
     )
     # right side renames user_id -> r_user: the self-join condition is
     # then between two DISTINCT columns, so Spark's "trivially true

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sentinel2_crop_trait_timeseries_spark.catalog import _q, _spread, _t
+from sentinel2_crop_trait_timeseries_spark.operators.ann import dot, norm
 
 # ---------------------------------------------------------------------
 # shared helpers
@@ -68,24 +69,8 @@ _SQL_WORDS = """
       FROM documents
 """
 
-# dot product / norms over float[] embeddings; both engines fold the
-# 64-dim arrays sequentially, and every surfaced value is rounded
 _STOPWORDS = ("the", "a", "of", "and", "is", "to", "in")
 _SQL_STOP = "('the','a','of','and','is','to','in')"
-
-
-def _dot(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a) -> F.Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
 
 
 # =====================================================================
@@ -1000,7 +985,7 @@ def ann_lsh_bucketed(spark, sf_dir):
     )
     cos = F.round(
         F.lit(1e-9)
-        + _dot(F.col("eq"), F.col("ec")) / (_norm(F.col("eq")) * _norm(F.col("ec"))),
+        + dot(F.col("eq"), F.col("ec")) / (norm(F.col("eq")) * norm(F.col("ec"))),
         4,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
@@ -1102,7 +1087,7 @@ def embedding_label_stats(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     return e.groupBy("label").agg(
         F.count("*").alias("n"),
-        F.round(F.lit(1e-9) + F.avg(_norm(F.col("embedding"))), 4).alias("mean_norm"),
+        F.round(F.lit(1e-9) + F.avg(norm(F.col("embedding"))), 4).alias("mean_norm"),
         F.round(
             F.lit(1e-9) + F.avg(F.element_at("embedding", 1).cast("double")), 4
         ).alias("mean_dim0"),

@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 from sentinel2_crop_trait_timeseries_spark.catalog import (
     _SQL_DAY,
     _SQL_HOUR,
-    _bucket,
-    _epoch,
     _q,
     _t,
 )
@@ -30,6 +28,10 @@ from sentinel2_crop_trait_timeseries_spark.operators.multimodal import (
     decode_meta,
     decode_pixels_fake,
     sample_frames,
+)
+from sentinel2_crop_trait_timeseries_spark.operators.rollup import (
+    _bucket_sec,
+    _sec,
 )
 from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
     run_file_stream_once,
@@ -121,7 +123,7 @@ def rollup_hourly_salted(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     salt = (F.col("event_id") % 8).alias("salt")
     stage1 = ev.groupBy(
-        "event_type", _bucket("ts", 3600).alias("bucket_ts"), salt
+        "event_type", _bucket_sec(_sec("ts"), 3600).alias("bucket_ts"), salt
     ).agg(
         F.count(F.lit(1)).alias("pn"),
         F.sum("value").alias("ps"),
@@ -382,7 +384,7 @@ def _events_as_sequences(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.col("user_id"),
-        F.floor(_epoch("ts") / 3600).cast("long").alias("h"),
+        F.floor(_sec("ts") / 3600).cast("long").alias("h"),
     ).agg((F.round(F.avg("value") * 1000) / 1000.0).alias("value"))
     obs = hourly.select(
         F.lit("events").alias("source"),
@@ -800,7 +802,7 @@ def fit_sigmoid_logit(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.col("user_id"),
-        F.floor(_epoch("ts") / 3600).cast("long").alias("h"),
+        F.floor(_sec("ts") / 3600).cast("long").alias("h"),
     ).agg((F.round(F.avg("value") * 1000) / 1000.0).alias("v"))
     obs = hourly.select(
         F.col("user_id").cast("string").alias("doc_id"), "h", "v"

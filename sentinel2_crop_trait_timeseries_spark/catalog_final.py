@@ -36,8 +36,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sentinel2_crop_trait_timeseries_spark.catalog import _q, _t
+from sentinel2_crop_trait_timeseries_spark.catalog import _SQL_DAY, _q, _t
 from sentinel2_crop_trait_timeseries_spark.catalog_corpus import (
+    _GRID,
     _SQL_SWORDS,
     _swords,
 )
@@ -47,10 +48,6 @@ from sentinel2_crop_trait_timeseries_spark.catalog_ts import (
     _DAY_US,
     _e,
 )
-
-_GRID = 1 << 20  # dyadic snap denominator (catalog_corpus house grid)
-
-_SQL_DAY = "cast(floor(floor(epoch(ts)) / 86400) * 86400 AS bigint)"
 
 
 def _day_col() -> F.Column:

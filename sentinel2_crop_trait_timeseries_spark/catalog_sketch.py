@@ -44,8 +44,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sentinel2_crop_trait_timeseries_spark.catalog import _q, _spread, _t
-
-_DAY_US = 86_400_000_000
+from sentinel2_crop_trait_timeseries_spark.catalog_ts import _DAY_US
 
 # ---------------------------------------------------------------------
 # z-order: interleave 10 bits of u (user bucket) and d (day bucket).

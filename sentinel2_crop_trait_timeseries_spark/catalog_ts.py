@@ -38,13 +38,15 @@ from sentinel2_crop_trait_timeseries_spark.catalog import (
     _q,
     _spread,
     _t,
-    _week_bucket,
+)
+from sentinel2_crop_trait_timeseries_spark.operators.rollup import (
+    _CENTS,
+    _US,
+    _bucket_sec,
+    _sec,
 )
 
-# epoch microseconds / cent fixed-point helpers (Spark side)
-_US = "cast(unix_micros(cast(ts as timestamp)) as bigint)"
-_CENTS = "cast(round(value * 100) as bigint)"
-# DuckDB twins
+# DuckDB twins of the epoch-micros / cents keys
 _SQL_US = "epoch_us(ts)"
 _SQL_CENTS = "cast(round(value * 100) as bigint)"
 
@@ -964,11 +966,11 @@ def cohort_retention_weekly(spark, sf_dir):
     partitioning (Catalyst reuses the exchange for the join), then the
     final (cohort, offset) count-distinct re-aggregates rows already
     reduced to one per (user, week). Weeks are the repo's tz-free
-    epoch arithmetic (catalog.py _week_bucket), offsets are exact
+    epoch arithmetic (rollup._bucket_sec), offsets are exact
     integer week counts — engine-identical at any scale."""
     ev = _t(spark, sf_dir, "events").select(
         "user_id",
-        _week_bucket("ts").alias("wk"),
+        _bucket_sec(_sec("ts"), "week").alias("wk"),
         "event_type",
     )
     su = (
@@ -2782,7 +2784,7 @@ def candlestick_weekly_rollup(spark, sf_dir):
 
     Reference analog: weekly tier re-aggregated from daily
     (operators/rollup.py cascade, SURVEY §2.4 #34); Monday alignment
-    matches catalog._week_bucket."""
+    matches rollup._bucket_sec."""
     daily = candlestick_daily(spark, sf_dir)
     week_us = (
         (F.expr(f"(day_us div {_DAY_US} + 3) div 7") * 7 - 3)

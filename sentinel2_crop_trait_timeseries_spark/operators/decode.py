@@ -21,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-EPOCH_UNIX = 1640995200  # 2022-01-01T00:00:00Z
-VALUE_SCALE = 1000.0
+from sentinel2_crop_trait_timeseries_spark.sources.gen import EPOCH_UNIX, VALUE_SCALE
 
 
 def _pair_index() -> Column:

@@ -21,6 +21,7 @@ snapshot isolation.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -86,11 +87,8 @@ class CheckpointManifest:
                 if "compression_ratio" in cols
                 else F.lit(None)
             ).cast("double").alias("compression_ratio"),
-            F.to_json(
-                F.struct(
-                    F.lit(tier).alias("tier"),
-                    F.lit(str(lineage or {})).alias("params"),
-                )
+            F.lit(
+                json.dumps({"tier": tier, "params": lineage or {}})
             ).alias("lineage"),
         )
         self.commit(entry)

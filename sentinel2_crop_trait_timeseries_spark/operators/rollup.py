@@ -139,9 +139,20 @@ RETENTION_POLICY = (
 
 
 def _sec(col) -> F.Column:
-    """Epoch seconds as BIGINT (tz-free; micros truncated)."""
+    """Epoch seconds as BIGINT (tz-free; micros truncated).
+
+    The driver parquet surfaces TIMESTAMP_NTZ; the catalog pins the
+    session tz to UTC, so NTZ -> TIMESTAMP -> LONG equals DuckDB's
+    floor(epoch(ts)).
+    """
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("timestamp").cast("long")
+
+
+# Exact integer keys as Spark SQL expressions: epoch micros of ``ts``
+# and ``value`` in cents (shared by the catalog and streaming queries).
+_US = "cast(unix_micros(cast(ts as timestamp)) as bigint)"
+_CENTS = "cast(round(value * 100) as bigint)"
 
 
 def _bucket_sec(sec: F.Column, width) -> F.Column:

@@ -24,8 +24,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_US = "cast(unix_micros(cast(ts as timestamp)) as bigint)"
-_CENTS = "cast(round(value * 100) as bigint)"
+from sentinel2_crop_trait_timeseries_spark.operators.rollup import _CENTS, _US
 
 
 def run_asof_stream_once(

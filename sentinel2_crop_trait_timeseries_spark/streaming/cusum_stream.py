@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_US = "cast(unix_micros(cast(ts as timestamp)) as bigint)"
-_CENTS = "cast(round(value * 100) as bigint)"
+from sentinel2_crop_trait_timeseries_spark.operators.rollup import _CENTS, _US
 
 OUT_SCHEMA = (
     "user_id long, n_events long, n_over long, first_over_ts_us long, "

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sentinel2_crop_trait_timeseries_spark.operators.rollup import _bucket_sec
+
 
 def streaming_hourly_rollup(
     stream: DataFrame,
@@ -145,7 +147,7 @@ def run_cascade_stream_once(
     streaming twin (hourly state -> daily -> weekly, each tier built
     from the one below, exactly like the batch cascade). Weekly
     buckets use the batch convention (Monday-anchored epoch
-    arithmetic, catalog._SQL_WEEK), not F.window's Thursday-anchored
+    arithmetic, rollup._bucket_sec), not F.window's Thursday-anchored
     7-day windows. foreachBatch sees the complete-mode hourly
     aggregate each trigger and overwrites both tier paths; the last
     availableNow trigger leaves the final answer. At scale the same
@@ -185,9 +187,7 @@ def run_cascade_stream_once(
         )
         daily.write.mode("overwrite").parquet(paths["daily"])
         d = spark.read.parquet(paths["daily"])  # weekly re-aggs the tier below
-        week_ts = (
-            (F.floor((F.col("bucket_ts") / 86400 + 3) / 7) * 7 - 3) * 86400
-        ).cast("long")
+        week_ts = _bucket_sec(F.col("bucket_ts"), "week")
         weekly = (
             d.groupBy(*keys, week_ts.alias("bucket_ts"))
             .agg(

@@ -50,10 +50,9 @@ def test_curation_pipeline_resumes_and_matches_contract(spark, tmp_path):
     committed = {}
     for r in manifest.collect():
         lineage = json.loads(r["lineage"])
-        params = lineage["params"]
-        # lineage params are a str(dict); extract the checksum int
-        checksum = int(params.split("'checksum': ")[1].split(",")[0])
-        committed[r["partition_key"]] = (r["rows_rolled"], checksum)
+        committed[r["partition_key"]] = (
+            r["rows_rolled"], lineage["params"]["checksum"]
+        )
     for stage in ("quality", "dedup_canonical", "decontaminated",
                   "packed", "sharded"):
         assert committed[stage] == contract[stage], (

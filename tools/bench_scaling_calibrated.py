@@ -87,7 +87,7 @@ def run_once(cores: int) -> dict:
     The fresh context's Python workers cold-import pandas/numpy inside
     the first job (~2 s across all slots) — a per-SESSION cost that a
     long-lived cluster pays once, so an untimed tiny warm job (same
-    mapInPandas path, every slot touched) runs first and the timed run
+    Python worker path, every slot touched) runs first and the timed run
     measures steady-state engine throughput.
 
     /proc/stat is read around the timed job: `busy_cores` is the average

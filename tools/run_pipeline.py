@@ -4,16 +4,20 @@
     spark-submit --py-files s2tt_spark.zip tools/run_pipeline.py \
         --input /path/sequences --output /path/tiers \
         --manifest /path/manifest [--docs N] [--curve asymptotic] \
-        [--knockout 0.1] [--sources-per-run 0]
+        [--knockout 0.1]
 
 Stages (all per-source partitions, committed to the checkpoint manifest
-so a killed run resumes where it stopped):
+so a killed run resumes where it stopped). Tiers, fits and segments are
+partitioned by source and written with dynamic partition overwrite, so
+a resumed run replaces only the todo sources' output:
 
   1. resume set      = distinct sources LEFT ANTI done manifest keys
   2. fused rollup    = gapfill_tiers over the todo sources (narrow, no
                        shuffle), written partitionBy(tier, source)
-  3. curve fit       = per-doc batched-LM sigmoid params + fit_rmse
-  4. compression     = Gorilla segments per (source, doc_id)
+  3. curve fit       = per-doc batched-LM sigmoid params + fit_rmse,
+                       written partitionBy(source)
+  4. compression     = Gorilla segments per (source, doc_id), written
+                       partitionBy(source)
   5. manifest commit = rows_rolled / fit_rmse / compression_ratio per source
 
 When --input does not exist and --docs is given, the deterministic
@@ -39,6 +43,13 @@ from sentinel2_crop_trait_timeseries_spark.operators.fit import fit_sigmoid
 from sentinel2_crop_trait_timeseries_spark.operators.decode import decode_observations_arrow
 from sentinel2_crop_trait_timeseries_spark.operators.compress import compress_segments
 from sentinel2_crop_trait_timeseries_spark.operators.manifest import CheckpointManifest
+
+
+def _write(writer, path: str) -> None:
+    """Overwrite only the source partitions present in this run."""
+    writer.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
 
 
 def main() -> None:
@@ -81,7 +92,7 @@ def main() -> None:
 
     # fused narrow pass: gap-fill + 3 retention tiers, no shuffle
     tiers = gapfill_tiers(work, curve=args.curve, knockout=args.knockout)
-    tiers.write.mode("overwrite").partitionBy("tier", "source").parquet(args.output)
+    _write(tiers.write.partitionBy("tier", "source"), args.output)
     tiers_stored = spark.read.parquet(args.output)
     rows_per_src = (
         tiers_stored.groupBy("source").agg(F.sum("n").alias("rows_rolled"))
@@ -89,7 +100,7 @@ def main() -> None:
 
     # per-doc NLS fit metrics (batched LM; failures ledgered not raised)
     fits = fit_sigmoid(work)
-    fits.write.mode("overwrite").parquet(args.fits)
+    _write(fits.write.partitionBy("source"), args.fits)
     fits_stored = spark.read.parquet(args.fits)
     rmse_per_src = fits_stored.filter("status = 'done'").groupBy("source").agg(
         F.avg("fit_rmse").alias("fit_rmse")
@@ -97,15 +108,17 @@ def main() -> None:
 
     # Gorilla-compressed observation segments
     seg = compress_segments(decode_observations_arrow(work))
-    seg.write.mode("overwrite").parquet(args.segments)
+    _write(seg.write.partitionBy("source"), args.segments)
     comp_per_src = (
         spark.read.parquet(args.segments)
         .groupBy("source")
         .agg((F.sum("raw_bytes") / F.sum("enc_bytes")).alias("compression_ratio"))
     )
 
+    # the stored tables also hold earlier runs' sources; commit only todo
     metrics = (
-        rows_per_src.join(rmse_per_src, "source", "left")
+        rows_per_src.join(todo, "source", "left_semi")
+        .join(rmse_per_src, "source", "left")
         .join(comp_per_src, "source", "left")
     )
     man.commit_metrics("all", metrics, key_col="source", run_id=run_id,
