@@ -481,25 +481,35 @@ def _minhash_profiles(d: DataFrame) -> DataFrame:
 
         md5 = hashlib.md5
         for pdf in batches:
-            ids, mins = [], []
+            # each distinct word of the batch is digested once: `slot`
+            # maps it to its row of `digests` (n_mh 32-bit slices); the
+            # cache lives for one Arrow batch, so one batch's words
+            # bound it
+            slot, digests = {}, []
+            ids, rows, lengths = [], [], []
             for doc_id, words in zip(pdf["doc_id"], pdf["ws"]):
                 if words is None or len(words) == 0:
                     continue
-                m = [None] * n_mh
                 for w in words:
-                    for i in range(n_salts):
-                        dig = md5((str(i) + "|" + w).encode("utf-8"))
-                        hx = dig.hexdigest()
-                        for j in range(4):
-                            v = int(hx[8 * j:8 * j + 8], 16)
-                            k = 4 * i + j
-                            if m[k] is None or v < m[k]:
-                                m[k] = v
+                    i = slot.get(w)
+                    if i is None:
+                        i = slot[w] = len(digests)
+                        d = []
+                        for s in range(n_salts):
+                            hx = md5((str(s) + "|" + w).encode("utf-8")
+                                     ).hexdigest()
+                            d.extend(int(hx[8 * j:8 * j + 8], 16)
+                                     for j in range(4))
+                        digests.append(d)
+                    rows.append(i)
                 ids.append(doc_id)
-                mins.append(m)
+                lengths.append(len(words))
             if not ids:
                 continue
-            arr = np.asarray(mins, dtype=np.int64)
+            table = np.asarray(digests, dtype=np.int64)
+            starts = np.cumsum([0] + lengths[:-1])
+            # every doc has >= 1 word, so no reduceat segment is empty
+            arr = np.minimum.reduceat(table[rows], starts, axis=0)
             out = {"doc_id": np.asarray(ids, dtype=np.int64)}
             for k in range(n_mh):
                 out[f"m{k}"] = arr[:, k]
@@ -1273,32 +1283,30 @@ def _snap(col):
     return F.floor(col * _KM_Q + F.lit(0.5)).cast("double") / _KM_Q
 
 
-def _wide_centroids(cb, key_cols, pos_col="pos", val_col="cv"):
-    """(key..., pos, val) rows -> (key..., cent array<double>) in pos
-    order — the _clustered_emb collect_list/array_sort pattern."""
-    return cb.groupBy(*key_cols).agg(
+_BLOCK_ROWS = 4096  # corpus rows per _blocked_cogroup block
+
+
+def _snapped_corpus(spark, sf_dir):
+    """(vec_id, emb): the embeddings snapped to the 1/_KM_Q grid — the
+    one corpus frame that training and every trained index read."""
+    return _t(spark, sf_dir, "embeddings").select(
+        "vec_id",
         F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(pos_col).alias("p"),
-                             F.col(val_col).alias("v"))
-                )
-            ),
-            lambda s: s.getField("v"),
-        ).alias("cent")
+            F.col("embedding"), lambda x: _snap(x.cast("double"))
+        ).alias("emb"),
     )
 
 
-def _blocked_cogroup(e, small, fn, schema, n_blocks=32):
-    """Hash-block the corpus, replicate the (tiny) centroid/table side
-    to every block, run one numpy kernel per block cogroup. Every
-    value involved lives on the 1/512 power-of-two grid, so numpy's
-    blocked summation is EXACT in IEEE double (no partial sum ever
-    rounds) and therefore bit-identical to the fold / posexplode-sum
-    forms it replaces, in any order — the fixed-point design's whole
-    point. Replaces the r4-r5 shape (posexplode -> broadcast join on
-    dim -> groupBy sums: tens of millions of narrow rows per Lloyd
-    step; guide §4.2)."""
+def _blocked_cogroup(e, small, fn, schema, n_rows):
+    """Hash-block the corpus, replicate the (small) query side to every
+    block, run one numpy kernel per block cogroup. A block holds about
+    _BLOCK_ROWS of the corpus's n_rows rows (at least one block), so
+    the block count grows with the corpus instead of being fixed.
+    Every value involved lives on the 1/512 power-of-two grid, so
+    numpy's blocked summation is EXACT in IEEE double (no partial sum
+    ever rounds) and therefore bit-identical to the per-row SQL sums of
+    the oracle, in any order — the fixed-point design's whole point."""
+    n_blocks = max(1, -(-n_rows // _BLOCK_ROWS))
     eb = e.withColumn(
         "blk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
     )
@@ -1310,164 +1318,173 @@ def _blocked_cogroup(e, small, fn, schema, n_blocks=32):
     )
 
 
-def _km_kernel(kind: str):
-    """Factory for the per-block Lloyd kernels ("partials", "assign",
-    "top2"). Returned closures are fully self-contained (imports and
-    helpers bound as closure locals, no module-global references), so
-    Spark pickles them BY VALUE and the Python worker never re-imports
-    catalog_docs (whose circular catalog imports only resolve
-    driver-side).
+def _init_centroids(e):
+    """The _PQ_K lowest vec_ids' embeddings in vec_id order, as a
+    (<= _PQ_K, dim) matrix: its first _KM_K rows seed k-means and all
+    of them seed every PQ subspace (the oracle chains' ORDER BY vec_id
+    LIMIT inits). One ordered limit, collected: no global window."""
+    rows = e.orderBy("vec_id").limit(_PQ_K).collect()
+    return _np.array(
+        [r["emb"] for r in rows], dtype=_np.float64
+    ).reshape(len(rows), _KM_DIM)
 
-    partials: assign each vector to its argmin-cost centroid (ties ->
-    smallest cl; centroids sorted by cl so argmin's first-occurrence
-    rule implements the struct-min tie-break), emit per-(cl, pos)
-    member sums + counts — map-side-combinable update partials.
-    assign: the (vec_id, cl) assignment itself.
-    top2: 2 nearest centroids by (cost, cl) — stable argsort over
-    cl-ordered columns implements the (d, cj) row_number tie-break."""
+
+def _vq_fns(model):
+    """(codes, tables, partials): numpy functions of an (n, dim) batch
+    E for a vector quantizer ``model`` — one (cls, C) pair per
+    subspace: ascending centroid ids and their grid-snapped
+    (K_s, dim / S) centroids. The closures are self-contained (imports
+    and values bound as closure locals, no module-global references),
+    so Spark pickles them BY VALUE and the Python worker never
+    re-imports catalog_docs (whose circular catalog imports only
+    resolve driver-side).
+
+    codes(E, top): the ``top`` nearest centroid ids of every subspace,
+    concatenated per row; a stable argsort over cl-ordered columns
+    implements the oracle's (d, cl) tie-break.
+    tables(E): each row's flattened ADC table t[s*_PQ_K + cl] =
+    <v_s, c_cl>; slots of untrained (s, cl) pairs stay 0.0 and are
+    never read (codes only take trained values).
+    partials(E, acc): adds each subspace's per-centroid member sums and
+    counts into ``acc`` — the map side of a Lloyd update.
+    Costs are |c|^2 - 2 v.c, exact on the grid like every sum here."""
     import numpy as np
-    import pandas as pd
 
-    def np_cost(E, C):
-        # |c|^2 - 2 v.c — exact on the grid, identical to the summed
-        # per-dim (cv^2 - 2 v cv) terms in any order
-        return (C * C).sum(axis=1)[None, :] - 2.0 * (E @ C.T)
+    model = [(np.asarray(cls, dtype=np.int64), np.asarray(C, dtype=np.float64))
+             for cls, C in model]
+    n_slots = _PQ_K
 
-    def stack(lpdf, rpdf):
-        r = rpdf.sort_values("cl")
-        E = np.stack(lpdf["emb"].to_numpy()).astype(np.float64)
-        C = np.stack(r["cent"].to_numpy()).astype(np.float64)
-        return E, C, r["cl"].to_numpy().astype(np.int64)
+    def subspaces(E):
+        for s, (cls, C) in enumerate(model):
+            ld = C.shape[1]
+            Es = E[:, s * ld:(s + 1) * ld]
+            yield s, Es, cls, C, (C * C).sum(axis=1)[None, :] - 2.0 * (Es @ C.T)
 
-    def partials(lpdf, rpdf):
-        empty = pd.DataFrame({
-            "cl": pd.Series([], dtype="int32"),
-            "pos": pd.Series([], dtype="int32"),
-            "psum": pd.Series([], dtype="float64"),
-            "pn": pd.Series([], dtype="int64"),
-        })
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return empty
-        E, C, cls = stack(lpdf, rpdf)
-        j = np_cost(E, C).argmin(axis=1)
-        out_cl, out_pos, out_sum, out_n = [], [], [], []
-        dim = E.shape[1]
-        for jj in range(len(cls)):
-            members = E[j == jj]
-            if len(members) == 0:
+    def codes(E, top):
+        return np.concatenate(
+            [cls[np.argsort(d, axis=1, kind="stable")[:, :top]]
+             for _, _, cls, _, d in subspaces(E)],
+            axis=1,
+        ).astype(np.int32)
+
+    def tables(E):
+        T = np.zeros((len(E), len(model) * n_slots))
+        for s, Es, cls, C, _ in subspaces(E):
+            T[:, s * n_slots + cls] = Es @ C.T
+        return T
+
+    def partials(E, acc):
+        for s, Es, cls, _, d in subspaces(E):
+            j = d.argmin(axis=1)
+            for jj in np.unique(j):
+                members = Es[j == jj]
+                psum, pn = acc.get((s, int(cls[jj])), (0.0, 0))
+                acc[(s, int(cls[jj]))] = (psum + members.sum(axis=0),
+                                          pn + len(members))
+
+    return codes, tables, partials
+
+
+def _vq_map(df, keep_emb=False, **cols):
+    """(vec_id, [emb,] *cols) from (vec_id, emb) rows, one numpy pass
+    per Arrow batch. Each col is ("codes", model, top) -> array<int> or
+    ("tables", model) -> array<double>, as _vq_fns computes them."""
+    specs = [(name, spec[0], _vq_fns(spec[1])[:2], spec[2:])
+             for name, spec in cols.items()]
+    types = {"codes": "array<int>", "tables": "array<double>"}
+    schema = ", ".join(
+        ["vec_id bigint"] + (["emb array<double>"] if keep_emb else [])
+        + [f"{name} {types[kind]}" for name, kind, _, _ in specs]
+    )
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
                 continue
-            out_cl.append(np.full(dim, cls[jj], dtype=np.int32))
-            out_pos.append(np.arange(1, dim + 1, dtype=np.int32))
-            out_sum.append(members.sum(axis=0))
-            out_n.append(np.full(dim, len(members), dtype=np.int64))
-        if not out_cl:
-            return empty
-        return pd.DataFrame({
-            "cl": np.concatenate(out_cl),
-            "pos": np.concatenate(out_pos),
-            "psum": np.concatenate(out_sum),
-            "pn": np.concatenate(out_n),
-        })
+            E = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+            out = {"vec_id": pdf["vec_id"].to_numpy(np.int64)}
+            if keep_emb:
+                out["emb"] = pdf["emb"]
+            for name, kind, (codes, tables), args in specs:
+                v = codes(E, *args) if kind == "codes" else tables(E)
+                out[name] = list(v)
+            yield pd.DataFrame(out)
 
-    def assign(lpdf, rpdf):
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({
-                "vec_id": pd.Series([], dtype="int64"),
-                "cl": pd.Series([], dtype="int32"),
+    return df.mapInPandas(kernel, schema)
+
+
+def _lloyd_update(e, model):
+    """One fixed-point Lloyd update of ``model`` over the corpus:
+    (model', counts'), one job. Every Spark partition sums its members
+    per (subspace, centroid) — K_s x dim / S values each — and the
+    driver adds the partitions' sums, divides by the member counts and
+    re-snaps (_snap's floor(x*Q + 0.5)/Q). Every sum is exact on the
+    grid and the division is one correctly-rounded IEEE op, so the
+    update is bit-identical to the oracle's GROUP BY means in any
+    order. Only centroids with members survive, as in that GROUP BY;
+    counts' holds each survivor's member count."""
+    partials = _vq_fns(model)[2]
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        acc = {}
+        for pdf in batches:
+            if len(pdf):
+                partials(np.stack(pdf["emb"].to_numpy()).astype(np.float64),
+                         acc)
+        if acc:
+            keys = sorted(acc)
+            yield pd.DataFrame({
+                "s": [k[0] for k in keys],
+                "cl": [k[1] for k in keys],
+                "psum": [acc[k][0] for k in keys],
+                "pn": [acc[k][1] for k in keys],
             })
-        E, C, cls = stack(lpdf, rpdf)
-        j = np_cost(E, C).argmin(axis=1)
-        return pd.DataFrame({
-            "vec_id": lpdf["vec_id"].to_numpy().astype(np.int64),
-            "cl": cls[j].astype(np.int32),
-        })
 
-    def top2(lpdf, rpdf):
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({
-                "vec_id": pd.Series([], dtype="int64"),
-                "cj": pd.Series([], dtype="int32"),
-                "rk": pd.Series([], dtype="int32"),
-            })
-        E, C, cls = stack(lpdf, rpdf)
-        order = np.argsort(np_cost(E, C), axis=1, kind="stable")[:, :2]
-        vid = lpdf["vec_id"].to_numpy().astype(np.int64)
-        n = len(vid)
-        return pd.DataFrame({
-            "vec_id": np.repeat(vid, 2),
-            "cj": cls[order].reshape(-1).astype(np.int32),
-            "rk": np.tile(np.array([1, 2], dtype=np.int32), n),
-        })
-
-    return {"partials": partials, "assign": assign, "top2": top2}[kind]
+    sums: dict = {}
+    for r in e.mapInPandas(
+        kernel, "s int, cl int, psum array<double>, pn bigint"
+    ).collect():
+        psum, pn = sums.get((r["s"], r["cl"]), (0.0, 0))
+        sums[(r["s"], r["cl"])] = (psum + _np.asarray(r["psum"]), pn + r["pn"])
+    out, counts = [], []
+    for s, (_, C) in enumerate(model):
+        keys = sorted(k for k in sums if k[0] == s)
+        n = _np.array([sums[k][1] for k in keys], dtype=_np.int64)
+        mean = _np.array(
+            [sums[k][0] for k in keys], dtype=_np.float64
+        ).reshape(len(keys), C.shape[1]) / n[:, None]
+        out.append((_np.array([k[1] for k in keys], dtype=_np.int64),
+                    _np.floor(mean * _KM_Q + 0.5) / _KM_Q))
+        counts.append(n)
+    return out, counts
 
 
-_KM_PARTIALS_SCHEMA = "cl int, pos int, psum double, pn bigint"
-
-
-def _km_update(partials):
-    # sum(psum) is the exact member sum (grid values, every partial
-    # exact), sum(pn) the exact count; one correctly-rounded division
-    # of bit-identical operands, then re-snap — unchanged convention
-    return partials.groupBy("cl", "pos").agg(
-        _snap(F.sum("psum") / F.sum("pn")).alias("cv")
-    )
-
-
-def _kmeans_parts(spark, sf_dir):
-    """Shared 2-round Lloyd state: (e, a2, c2) — the grid-snapped
-    corpus, final assignment (vec_id, cl), and trained (cl, pos, cv)
-    codebook rows.
-
-    r6: each Lloyd step is one _blocked_cogroup numpy kernel (assign +
-    per-cluster partial sums inside the block) instead of posexplode ->
-    broadcast dim-join -> groupBy over ~10M narrow rows per step; the
-    update aggregates K*dim partials per block. Fixed-point grid =>
-    every sum exact in double => bit-identical to the old chain (and
-    the DuckDB CTE oracle) by construction. c2 and the round-1
-    codebook are eagerly localCheckpoint-ed: the chain executes exactly
-    ONCE per query run and every consumer branch reads the
-    materialized result (the r3 'recomputes the whole Lloyd chain'
-    fix). a2's checkpoint is LAZY: only ivf_train_kmeans consumes the
-    full-corpus assignment, so its single action materializes it once,
-    while ann_ivf_trained / ann_ivfpq (which take only e and c2) no
-    longer pay a dead full-corpus assign pass per run. At cluster
-    scale the same seam would be a write-through table checkpoint;
-    c2 is K*dim = 512 rows, a2 one row per vector."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"), lambda x: _snap(x.cast("double"))
-        ).alias("emb"),
-    )
-    w = Window.orderBy("vec_id")
-    init = (
-        e.orderBy("vec_id").limit(_KM_K)
-        .select((F.row_number().over(w) - 1).alias("cl"),
-                F.col("emb").alias("cent"))
-    )
-    c1 = _km_update(
-        _blocked_cogroup(e, init, _km_kernel("partials"),
-                         _KM_PARTIALS_SCHEMA)
-    )
-    c1w = _wide_centroids(c1, ["cl"]).localCheckpoint(eager=True)
-    a2 = (
-        _blocked_cogroup(e, c1w, _km_kernel("assign"),
-                         "vec_id bigint, cl int")
-        .localCheckpoint(eager=False)
-    )
-    c2 = _km_update(
-        _blocked_cogroup(e, c1w, _km_kernel("partials"),
-                         _KM_PARTIALS_SCHEMA)
-    ).localCheckpoint(eager=True)
-    return e, a2, c2
+def _kmeans_parts(e, init):
+    """2-round fixed-point Lloyd over the snapped corpus ``e``, seeded
+    with the first _KM_K rows of ``init`` (_init_centroids):
+    (model, counts) — the trained codebook [(cls, C2)] and each
+    cluster's member count under the final assignment (the oracle's
+    a2 sizes). Each round is one job (_lloyd_update), so the chain
+    has run exactly once when the call returns and hands its consumers
+    plain arrays; nothing of it remains in their plans. Nothing is
+    materialized lazily, so the train-once property holds however many
+    actions run on the consumers at a time."""
+    k = min(_KM_K, len(init))
+    model, _ = _lloyd_update(e, [(_np.arange(k), init[:k])])
+    return _lloyd_update(e, model)
 
 
 @_q("ivf_train_kmeans", _KMEANS_SQL)
 def ivf_train_kmeans(spark, sf_dir):
     """Train an 8-centroid IVF codebook with 2 Lloyd rounds (init =
-    the 8 lowest vec_ids' embeddings): broadcast-join assignment,
-    K*dim-sized update aggregates, no driver collect. FIXED-POINT
+    the 8 lowest vec_ids' embeddings): per-partition partial sums
+    reduced on the driver, K*dim values per round. FIXED-POINT
     determinism: inputs and centroids live on the 1/512 power-of-two
     grid, so every cost/update sum is exact in IEEE double and the
     whole iterated chain is independent of summation order,
@@ -1476,17 +1493,21 @@ def ivf_train_kmeans(spark, sf_dir):
     produced the one driver-red row). Output: the trained codebook as
     (cluster_id, pos, centroid_val, n_members) rows, hash-verified
     against the DuckDB CTE chain."""
-    _, a2, c2 = _kmeans_parts(spark, sf_dir)
-    sizes = a2.groupBy("cl").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        c2.join(sizes, "cl")
-        .select(
-            F.col("cl").alias("cluster_id"),
-            F.col("pos").cast("int").alias("pos"),
-            F.col("cv").alias("centroid_val"),
-            F.col("n").alias("n_members"),
-        )
+    import pandas as pd
+
+    e = _snapped_corpus(spark, sf_dir)
+    [(cls, C)], [n] = _kmeans_parts(e, _init_centroids(e))
+    k, dim = C.shape
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "cluster_id": _np.repeat(cls, dim).astype(_np.int32),
+            "pos": _np.tile(_np.arange(1, dim + 1, dtype=_np.int32), k),
+            "centroid_val": C.reshape(-1),
+            "n_members": _np.repeat(n, dim),
+        }),
+        "cluster_id int, pos int, centroid_val double, n_members bigint",
     )
+
 
 # trained-IVF cell assignment (codebook from the 2-round Lloyd chain):
 # corpus cell = argmin cost, probes = 2 nearest cells for the query
@@ -1527,34 +1548,15 @@ _IVF_TRAINED_SQL = f"""
 """
 
 
-def _trained_cells(e, c2):
-    """ranked (vec_id, cj, rk, emb): each vector's 2 nearest trained
-    cells (rk=1 is its home cell) — one _blocked_cogroup numpy kernel
-    (costs exact on the grid; stable argsort = the (d, cj) row_number
-    tie-break) instead of the posexplode dim-join + per-vector window
-    over 10M narrow rows. The 2N-row (vec_id, cj, rk) output is
-    eagerly checkpointed: both consumers slice it twice (corpus rk=1
-    side and probe side of the scoring cogroup), and the Python kernel
-    defeats subtree reuse, so without this the assignment pass would
-    execute once per slice."""
-    c2w = _wide_centroids(c2, ["cl"])
-    ranked = _blocked_cogroup(
-        e, c2w, _km_kernel("top2"), "vec_id bigint, cj int, rk int"
-    ).localCheckpoint(eager=True)
-    return ranked.join(e, "vec_id")
-
-
 @_q("ann_ivf_trained", _IVF_TRAINED_SQL)
 def ann_ivf_trained(spark, sf_dir):
     """IVF search over the TRAINED codebook: cells and probe sets come
     from ivf_train_kmeans' 2-round Lloyd output instead of the seeded
     centroids (ann_ivf), closing the loop train -> index -> search.
-    Assignment joins the (cluster, dim, value) codebook rows broadcast
-    against posexploded vectors — the corpus never shuffles; the
-    trained codebook (and final assignment) are localCheckpoint-ed in
-    _kmeans_parts, so the Lloyd chain executes ONCE and every branch
-    here reads the materialized 512-row result (r4 fix; plan-asserted
-    in tests/test_plans.py). ann_recall
+    Training runs once, before the plan is built (_kmeans_parts); the
+    plan assigns corpus rows to their home cell and queries to their 2
+    nearest cells with narrow numpy kernels (stable argsort = the
+    oracle's (d, cl) row_number tie-break). ann_recall
     measures this index's recall@3 beside the seeded one: 0.5 at
     sf0.01 for both — expected, because on near-random embeddings
     recall tracks the probed corpus fraction (nprobe/K), which is the
@@ -1565,19 +1567,22 @@ def ann_ivf_trained(spark, sf_dir):
         grouped_cell_topk,
     )
 
-    e, _, c2 = _kmeans_parts(spark, sf_dir)
-    ranked = _trained_cells(e, c2)
-    corpus = ranked.filter(F.col("rk") == 1).select(
+    e = _snapped_corpus(spark, sf_dir)
+    km, _ = _kmeans_parts(e, _init_centroids(e))
+    corpus = _vq_map(e, keep_emb=True, cells=("codes", km, 1)).select(
         F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ec"),
-        F.col("cj").alias("cell"),
+        F.col("cells")[0].alias("cell"),
     )
-    probes = ranked.filter(F.col("vec_id") % 50 == 0).select(
+    probes = _vq_map(
+        e.filter(F.col("vec_id") % 50 == 0), keep_emb=True,
+        cells=("codes", km, 2),
+    ).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"),
-        F.col("cj").alias("cell"),
+        F.explode("cells").alias("cell"),
     )
     # per-cell cogroup scoring (grouped_cell_topk): every candidate
-    # meets exactly once (one home cell per corpus row, rk<=2 probe
-    # cells distinct per query); grid-snapped values make the numpy
+    # meets exactly once (one home cell per corpus row, 2 distinct
+    # probe cells per query); grid-snapped values make the numpy
     # sums exact, so scores are engine-identical by construction
     return grouped_cell_topk(corpus, probes, 3)
 
@@ -1596,9 +1601,9 @@ def ann_ivf_trained(spark, sf_dir):
 # dot products against the codebook, and each corpus vector's
 # approximate inner product is 4 table lookups summed — the corpus is
 # scored from codes alone, never touching the original floats. Plan:
-# every join is a broadcast equi-join on (subspace, lpos) or
-# (subspace, code); the corpus explodes narrow and shuffles only for
-# its groupBy aggregations (map-side combinable).
+# the codebook trains in one job before the plan is built
+# (_pq_parts); corpus codes and query tables come from narrow numpy
+# kernels (_vq_map) and meet in the blocked ADC cogroup.
 # ---------------------------------------------------------------------
 
 _PQ_S = 4    # subspaces
@@ -1676,109 +1681,6 @@ _ANN_PQ_SQL = f"""
 """
 
 
-def _pq_kernel(kind: str):
-    """Factory for the per-block PQ kernels ("partials", "codes",
-    "tbl") — self-contained closures (no module-global references, see
-    _km_kernel's pickling note); subspace geometry bound by value.
-
-    partials: per-subspace argmin assignment against the init
-    centroids (ties -> smallest code) + per-(s, cl, lpos) member
-    sums/counts for the codebook update.
-    codes: the 4 per-subspace codes of each vector as one array.
-    tbl: each query's flattened ADC table t[s*K + cl] = sum_lpos v*cv
-    (slots for untrained (s, cl) pairs stay 0.0 and are never read:
-    codes only take trained values). All sums exact on the grid."""
-    import numpy as np
-    import pandas as pd
-
-    S, K, LD = _PQ_S, _PQ_K, _PQ_LD
-
-    def np_cost(E, C):
-        return (C * C).sum(axis=1)[None, :] - 2.0 * (E @ C.T)
-
-    def sub(E):
-        return [E[:, s * LD:(s + 1) * LD] for s in range(S)]
-
-    def codebook(rpdf):
-        out = []
-        for s in range(S):
-            sb = rpdf[rpdf["s"] == s].sort_values("cl")
-            cls = sb["cl"].to_numpy().astype(np.int64)
-            C = (
-                np.stack(sb["cent"].to_numpy()).astype(np.float64)
-                if len(sb) else np.zeros((0, LD))
-            )
-            out.append((cls, C))
-        return out
-
-    def partials(lpdf, rpdf):
-        empty = pd.DataFrame({
-            "s": pd.Series([], dtype="int32"),
-            "cl": pd.Series([], dtype="int32"),
-            "lpos": pd.Series([], dtype="int32"),
-            "psum": pd.Series([], dtype="float64"),
-            "pn": pd.Series([], dtype="int64"),
-        })
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return empty
-        r = rpdf.sort_values("cl")
-        E = np.stack(lpdf["emb"].to_numpy()).astype(np.float64)
-        C = np.stack(r["cent"].to_numpy()).astype(np.float64)
-        cls = r["cl"].to_numpy().astype(np.int64)
-        out = {"s": [], "cl": [], "lpos": [], "psum": [], "pn": []}
-        for s, (Es, Cs) in enumerate(zip(sub(E), sub(C))):
-            j = np_cost(Es, Cs).argmin(axis=1)
-            for jj in range(len(cls)):
-                members = Es[j == jj]
-                if len(members) == 0:
-                    continue
-                out["s"].append(np.full(LD, s, dtype=np.int32))
-                out["cl"].append(np.full(LD, cls[jj], dtype=np.int32))
-                out["lpos"].append(np.arange(LD, dtype=np.int32))
-                out["psum"].append(members.sum(axis=0))
-                out["pn"].append(np.full(LD, len(members), dtype=np.int64))
-        if not out["s"]:
-            return empty
-        return pd.DataFrame({k: np.concatenate(v) for k, v in out.items()})
-
-    def codes_fn(lpdf, rpdf):
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({
-                "vec_id": pd.Series([], dtype="int64"),
-                "codes": pd.Series([], dtype="object"),
-            })
-        E = np.stack(lpdf["emb"].to_numpy()).astype(np.float64)
-        cb = codebook(rpdf)
-        cols = [
-            cls[np_cost(Es, Cs).argmin(axis=1)]
-            for Es, (cls, Cs) in zip(sub(E), cb)
-        ]
-        codes = np.stack(cols, axis=1).astype(np.int32)
-        return pd.DataFrame({
-            "vec_id": lpdf["vec_id"].to_numpy().astype(np.int64),
-            "codes": list(codes),
-        })
-
-    def tbl_fn(lpdf, rpdf):
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="int64"),
-                "t": pd.Series([], dtype="object"),
-            })
-        E = np.stack(lpdf["emb"].to_numpy()).astype(np.float64)
-        cb = codebook(rpdf)
-        T = np.zeros((len(E), S * K))
-        for s, (Es, (cls, Cs)) in enumerate(zip(sub(E), cb)):
-            if len(cls):
-                T[:, s * K + cls] = Es @ Cs.T  # exact
-        return pd.DataFrame({
-            "query_id": lpdf["vec_id"].to_numpy().astype(np.int64),
-            "t": list(T),
-        })
-
-    return {"partials": partials, "codes": codes_fn, "tbl": tbl_fn}[kind]
-
-
 def _adc_topk_fn(use_cells: bool | None):
     """Per-block ADC scorer: approximate inner product of every
     (corpus, query) pair in the block = 4 table lookups summed
@@ -1792,7 +1694,7 @@ def _adc_topk_fn(use_cells: bool | None):
     import pandas as pd
 
     S, K = _PQ_S, _PQ_K  # bound by value: the closure must not touch
-    # module globals (worker-side unpickling, see _km_kernel)
+    # module globals (worker-side unpickling, see _vq_fns)
 
     def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({
@@ -1837,47 +1739,18 @@ def _adc_topk_fn(use_cells: bool | None):
     return fn
 
 
-def _pq_parts(spark, sf_dir):
-    """Shared PQ state: (cbw, codes, tbl) — trained per-subspace
-    codebook in wide (s*16+cl ordered) form, per-vector 4-code arrays,
-    per-query flattened ADC tables. cbw and codes are
-    localCheckpoint-ed so PQ training runs once regardless of consumer
-    branches (the _kmeans_parts discipline). r6: every step is a
-    _blocked_cogroup numpy kernel over wide rows (exact on the grid,
-    bit-identical to the old posexplode/join chain and the DuckDB CTE
-    oracle) instead of ~40M narrow (vec, s, lpos) join rows."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"), lambda x: _snap(x.cast("double"))
-        ).alias("emb"),
+def _pq_parts(e, init):
+    """One fixed-point Lloyd round per PQ subspace over the snapped
+    corpus ``e``, every subspace seeded with the matching slice of all
+    ``init`` rows (_init_centroids): (model, counts) — the trained
+    per-subspace codebooks [(cls_s, C_s)] and their member counts. One
+    job (_lloyd_update); consumers encode and score with _vq_map, and
+    counts[0] sums to the corpus row count (every vector has one code
+    per subspace)."""
+    cls = _np.arange(len(init))
+    return _lloyd_update(
+        e, [(cls, init[:, s * _PQ_LD:(s + 1) * _PQ_LD]) for s in range(_PQ_S)]
     )
-    w = Window.orderBy("vec_id")
-    init = (
-        e.orderBy("vec_id").limit(_PQ_K)
-        .select((F.row_number().over(w) - 1).alias("cl"),
-                F.col("emb").alias("cent"))
-    )
-    pcb = _blocked_cogroup(
-        e, init, _pq_kernel("partials"),
-        "s int, cl int, lpos int, psum double, pn bigint"
-    ).groupBy("s", "cl", "lpos").agg(
-        _snap(F.sum("psum") / F.sum("pn")).alias("cv")
-    )
-    # wide codebook: one row per (s, cl) with its 16-dim subcentroid
-    cbw = _wide_centroids(pcb, ["s", "cl"], pos_col="lpos").localCheckpoint(
-        eager=True
-    )
-    codes = (
-        _blocked_cogroup(e, cbw, _pq_kernel("codes"),
-                         "vec_id bigint, codes array<int>")
-        .localCheckpoint(eager=True)
-    )
-    tbl = _blocked_cogroup(
-        e.filter(F.col("vec_id") % 50 == 0), cbw,
-        _pq_kernel("tbl"), "query_id bigint, t array<double>"
-    )
-    return cbw, codes, tbl
 
 
 @_q("ann_pq", _ANN_PQ_SQL)
@@ -1886,10 +1759,10 @@ def ann_pq(spark, sf_dir):
     16 fixed-point-Lloyd centroids; corpus stored as 4 codes/vector,
     queries precompute 4x16 exact dot tables, approximate inner
     product = 4 lookups summed. All arithmetic on the 1/512 grid —
-    exact sums, bit-identical vs the DuckDB CTE chain. The codebook
-    and code assignments are localCheckpoint-ed (train once, like
-    _kmeans_parts); every join is broadcast (codebook 1024 rows, query
-    tables Q x 64 rows) so the corpus never shuffles to be scored.
+    exact sums, bit-identical vs the DuckDB CTE chain. The codebook is
+    trained once, before the plan is built (_pq_parts); the plan
+    encodes the corpus and the query tables with narrow numpy kernels
+    and meets them in the blocked ADC cogroup.
 
     Calibration note: recall@3 = 0.17 at sf0.01 (ann_recall's 'pq'
     row) — on these near-random embeddings a 4x16 quantizer keeps
@@ -1898,10 +1771,15 @@ def ann_pq(spark, sf_dir):
     clustered corpora the codebooks land on the modes and ADC ranks
     the true neighbors. ann_ivfpq is the production composition (IVF
     prunes the cells, ADC scores the survivors from codes)."""
-    _, codes, tbl = _pq_parts(spark, sf_dir)
+    e = _snapped_corpus(spark, sf_dir)
+    pq, counts = _pq_parts(e, _init_centroids(e))
     cand = _blocked_cogroup(
-        codes, tbl, _adc_topk_fn(None),
+        _vq_map(e, codes=("codes", pq, 1)),
+        _vq_map(e.filter(F.col("vec_id") % 50 == 0), t=("tables", pq))
+        .withColumnRenamed("vec_id", "query_id"),
+        _adc_topk_fn(None),
         "query_id bigint, neighbor_id bigint, adc double",
+        int(counts[0].sum()),
     )
     rk = F.row_number().over(
         Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")
@@ -1951,14 +1829,14 @@ _ANN_IVFPQ_SQL = f"""
 @_q("ann_ivfpq", _ANN_IVFPQ_SQL)
 def ann_ivfpq(spark, sf_dir):
     """IVF+PQ composed ANN: candidates from the trained IVF cells
-    (nprobe=2 of K=8, _kmeans_parts + _trained_cells), scored by PQ
-    asymmetric distance (4 table lookups per candidate from
-    _pq_parts' codes) — train once (both chains localCheckpoint-ed),
+    (nprobe=2 of K=8, _kmeans_parts), scored by PQ asymmetric distance
+    (4 table lookups per candidate from _pq_parts' codes) — train once,
     prune by cells, score from codes; the float corpus is never read
-    at query time. Candidate and table joins are broadcast equi-joins
-    (cand is queries x probed fraction, tables Q x 64 rows); only the
-    code assignment aggregations shuffle, at K*dim-bounded sizes.
-    Bit-exact vs the composed DuckDB CTE chain by the same
+    at query time. Both chains share one snapped corpus frame and one
+    init (_init_centroids) and finish before the plan is built, so
+    the plan is two narrow encode kernels (corpus: codes + home cell;
+    queries: ADC table + 2 probe cells) meeting in one blocked
+    cogroup. Bit-exact vs the composed DuckDB CTE chain by the same
     fixed-point-grid argument as both parents.
 
     Calibration: recall@3 = 0.07 at sf0.01 (ann_recall 'ivfpq') —
@@ -1967,22 +1845,21 @@ def ann_ivfpq(spark, sf_dir):
     exists to tune nprobe / subspace count on a sample before
     committing the index shape at scale, where clustered corpora
     make both factors sharp."""
-    e, _, c2 = _kmeans_parts(spark, sf_dir)
-    ranked = _trained_cells(e, c2)
-    corpus_cells = ranked.filter(F.col("rk") == 1).select(
-        "vec_id", F.col("cj").alias("cell")
-    )
-    probe_cells = (
-        ranked.filter(F.col("vec_id") % 50 == 0)
-        .groupBy(F.col("vec_id").alias("query_id"))
-        .agg(F.collect_list("cj").alias("cells"))
-    )
-    _, codes, tbl = _pq_parts(spark, sf_dir)
+    e = _snapped_corpus(spark, sf_dir)
+    init = _init_centroids(e)
+    km, _ = _kmeans_parts(e, init)
+    pq, counts = _pq_parts(e, init)
+    corpus = _vq_map(
+        e, codes=("codes", pq, 1), cells=("codes", km, 1)
+    ).select("vec_id", "codes", F.col("cells")[0].alias("cell"))
+    queries = _vq_map(
+        e.filter(F.col("vec_id") % 50 == 0),
+        t=("tables", pq), cells=("codes", km, 2),
+    ).withColumnRenamed("vec_id", "query_id")
     cand = _blocked_cogroup(
-        codes.join(corpus_cells, "vec_id"),
-        tbl.join(probe_cells, "query_id"),
-        _adc_topk_fn(True),
+        corpus, queries, _adc_topk_fn(True),
         "query_id bigint, neighbor_id bigint, adc double",
+        int(counts[0].sum()),
     )
     rk2 = F.row_number().over(
         Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")

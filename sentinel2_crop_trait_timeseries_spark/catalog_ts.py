@@ -1355,16 +1355,17 @@ def streaming_asof_probe(spark, sf_dir):
 def streaming_cusum_state(spark, sf_dir):
     """Streaming twin of cusum_changepoint_user: the per-user CUSUM
     recursion carried across micro-batches in GroupState
-    (applyInPandasWithState, streaming/cusum_stream.py). Unlike
-    running_totals (rollup_stream.py), whose count/sum state is
-    order-insensitive, CUSUM's max(0, .) recursion requires the
-    source's per-key event-time ordering — the harness streams the
-    fixture as time-range chunk files one per trigger, standing in for
-    Kafka per-key order. The alarm target is an offline artifact
-    (per-user doubled median) broadcast onto arrivals. Oracle = the
-    batch recursive CTE; a hash match proves the cross-batch state
-    path equals the batch recursion bit-for-bit (all-BIGINT state —
-    nothing to hide drift in)."""
+    (applyInPandasWithState, streaming/cusum_stream.py), keyed by user
+    range so that one state call folds every user of its range that
+    the batch touches. Unlike running_totals (rollup_stream.py), whose
+    count/sum state is order-insensitive, CUSUM's max(0, .) recursion
+    requires the source's per-key event-time ordering — the harness
+    streams the fixture as equal-width time-range chunk files one per
+    trigger, standing in for Kafka per-key order. The alarm target is
+    an offline artifact (per-user doubled median) broadcast onto
+    arrivals. Oracle = the batch recursive CTE; a hash match proves the
+    cross-batch state path equals the batch recursion bit-for-bit
+    (all-BIGINT state — nothing to hide drift in)."""
     from sentinel2_crop_trait_timeseries_spark.streaming.cusum_stream import (
         run_cusum_stream_once,
     )

@@ -6,6 +6,8 @@ partition-invariance for the queries whose docstrings claim exactness
 by construction.
 """
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -557,6 +559,76 @@ def test_cusum_stream_checkpoint_recovery(spark):
     # a stop + new-query restart from the checkpoint must land on the
     # exact same per-user final state as the uninterrupted run
     assert resumed == one_shot and len(one_shot) > 0
+
+
+def test_streaming_cusum_shared_range_key(spark, tmp_path):
+    """State is keyed by user range, pmod(user_id, _USER_RANGES): two
+    users share every key here, and one of them has no rows in the
+    middle micro-batch, so its range's state must carry it through a
+    call that only updates its neighbour. Both drivers still equal the
+    batch recursion, stop every query they start, and leave no staging,
+    live or checkpoint directory behind. (At sf0.001 user ids are 0-14,
+    so the contract fixture never shares a key.)"""
+    import glob
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from sentinel2_crop_trait_timeseries_spark.operators.rollup import _US
+    from sentinel2_crop_trait_timeseries_spark.streaming import (
+        cusum_stream as cs,
+    )
+
+    r = cs._USER_RANGES
+    ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
+        "ts_us", F.expr(_US)
+    )
+    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
+    width = (hi - lo) // 3 + 1  # _time_chunks' cut for 3 chunks
+    # users 8.. move to r.., sharing keys 0.. with users 0..; user r
+    # loses its middle-chunk rows
+    uid = F.when(F.col("user_id") >= 8, F.col("user_id") - 8 + r).otherwise(
+        F.col("user_id")
+    )
+    gap = (F.col("user_id") == 8) & (
+        F.expr(f"(ts_us - {lo}) div {width}") == 1
+    )
+    ev.filter(~gap).withColumn("user_id", uid).drop("ts_us").write.parquet(
+        str(tmp_path / "events.parquet")
+    )
+    def staged():
+        return {p for kind in ("stage", "live", "ckpt") for p in glob.glob(
+            os.path.join(tempfile.gettempdir(), f"s2tt_cusum_{kind}_*"))}
+
+    before = staged()
+
+    batch = QUERIES["cusum_changepoint_user"]["fn"](
+        spark, str(tmp_path)
+    ).toPandas()
+    cols = sorted(batch.columns)
+    want = batch[cols].sort_values(cols).reset_index(drop=True)
+
+    got = cs.run_cusum_stream_once(spark, str(tmp_path), n_chunks=3)
+    assert not spark.streams.active
+    got = got.toPandas()
+    n_upd = spark.table("s2tt_stream_cusum").toPandas().groupby(
+        "user_id"
+    ).size()
+    assert n_upd[r] == 2 and n_upd[0] == 3, n_upd  # r skipped batch 2
+    pd.testing.assert_frame_equal(
+        got[cols].sort_values(cols).reset_index(drop=True), want,
+        check_dtype=False,
+    )
+
+    resumed = cs.run_cusum_stream_resumable(
+        spark, str(tmp_path), n_chunks=3, split_at=1
+    )
+    assert not spark.streams.active
+    pd.testing.assert_frame_equal(
+        resumed.toPandas()[cols].sort_values(cols).reset_index(drop=True),
+        want, check_dtype=False,
+    )
+    assert staged() == before
 
 
 def test_candlestick_daily_matches_pandas_ohlc(spark, events):

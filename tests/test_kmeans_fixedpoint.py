@@ -4,7 +4,7 @@ The driver-red flake of r3 was order-dependent float summation inside
 the iterated Lloyd chain. The redesign snaps every value to the 1/512
 power-of-two grid so each sum is EXACT in IEEE double — these tests
 pin the exactness argument itself (order-independence of grid sums)
-and the plan property that the chain executes once (localCheckpoint).
+and the plan property that the chain executes once (before the plan).
 """
 
 import numpy as np
@@ -53,24 +53,23 @@ def test_snap_matches_sql_floor_convention():
 
 
 def test_kmeans_chain_checkpointed_once(spark):
-    """ivf_train_kmeans / ann_ivf_trained read the Lloyd result from a
-    localCheckpoint (ExistingRDD scan): the k-means subtree — whose
-    signature is the init row_number Window — never re-executes per
-    DataFrame branch (r3 'recomputes the whole Lloyd chain' fix)."""
+    """The Lloyd chain runs once, before any plan is built: the
+    ivf_train_kmeans result is the driver-held codebook as one local
+    relation, and no consumer plan re-derives any of the chain — its
+    signature, the orderBy(vec_id).limit(K) init (TakeOrderedAndProject
+    / GlobalLimit, or a Window over the init rows), is gone from every
+    branch (r3 'recomputes the whole Lloyd chain' fix)."""
     plan = (
         QUERIES["ivf_train_kmeans"]["fn"](spark, SF)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "ExistingRDD" in plan
+    assert plan.startswith("LocalTableScan")
     assert "Window" not in plan  # init subtree gone — chain ran once
 
     plan2 = (
         QUERIES["ann_ivf_trained"]["fn"](spark, SF)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "ExistingRDD" in plan2
-    # the init subtree's signature — orderBy(vec_id).limit(K) — must be
-    # gone from every branch (it compiles to TakeOrderedAndProject /
-    # GlobalLimit); only the partitioned rk / topk windows remain
+    # only the partitioned rk / topk windows remain
     assert "TakeOrderedAndProject" not in plan2
     assert "GlobalLimit" not in plan2

@@ -173,39 +173,113 @@ def test_ann_ivf_cogroup_cells(spark):
 
 
 def test_ann_pq_cogroup_over_checkpointed_codes(spark):
-    """PQ ANN: the corpus is scored from its checkpointed codes by the
-    blocked ADC cogroup kernel — no nested loop, training ran once."""
+    """PQ ANN: the corpus is scored from its codes by the blocked ADC
+    cogroup kernel — no nested loop, and training ran once, before the
+    plan was built."""
     plan = _executed(spark, "ann_pq")
     assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "ExistingRDD" in plan  # codebook/codes checkpointed: train once
+    # the codebook trained before the plan was built: no init limit
+    assert "TakeOrderedAndProject" not in plan and "GlobalLimit" not in plan
 
 
 def test_ann_ivfpq_cogroup_over_checkpointed_state(spark):
     """IVF+PQ composition: cell pruning and ADC scoring ride the
-    blocked cogroup kernel over checkpointed trained state — no
-    nested loop, both training chains ran once."""
+    blocked cogroup kernel over trained state — no nested loop, both
+    training chains ran once, before the plan was built."""
     plan = _executed(spark, "ann_ivfpq")
     assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "ExistingRDD" in plan  # both training chains ran once
+    # both chains trained before the plan was built: no init limit
+    assert "TakeOrderedAndProject" not in plan and "GlobalLimit" not in plan
+
+
+def _single_partition(node) -> bool:
+    """An Exchange to one partition, or a Window with no partition
+    spec: an operator that funnels all its rows through one task."""
+    name = node.nodeName()
+    if name == "Exchange":
+        return node.outputPartitioning().toString() == "SinglePartition"
+    return name == "Window" and node.partitionSpec().isEmpty()
+
+
+_PYTHON_NODES = ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+                 "FlatMapCoGroupsInPandas", "ArrowEvalPython",
+                 "BatchEvalPython")
 
 
 def test_trained_search_kernel_counts(spark):
-    """r6 checkpoint discipline for the trained-IVF search queries:
-    the _trained_cells top2 assignment is checkpointed (its kernel
-    must NOT reappear per consumer slice) and _kmeans_parts' a2
-    full-corpus assignment is lazy (a dead pass for these queries, so
-    its kernel must not appear at all). What remains in the plan is
-    exactly the per-query scoring work: 1 cogroup kernel for
-    ann_ivf_trained (grouped_cell_topk), 2 for ann_ivfpq (ADC table
-    build + ADC scoring)."""
-    p1 = _executed(spark, "ann_ivf_trained")
-    assert p1.count("FlatMapCoGroupsInPandas") == 1
-    p2 = _executed(spark, "ann_ivfpq")
-    assert p2.count("FlatMapCoGroupsInPandas") == 2
+    """Trained-index serving plans hold serving kernels only. Training
+    (_kmeans_parts, _pq_parts) finishes before the plan is built, so
+    no partial-sum kernel, init limit or unpartitioned window is left
+    in it; what remains is one narrow encode kernel per side (corpus:
+    home cell and/or PQ codes; queries: probe cells and/or ADC tables)
+    and the one cogroup that scores them."""
+    for name in ("ann_ivf_trained", "ann_pq", "ann_ivfpq"):
+        nodes = _plan_nodes(_plan(spark, name).executedPlan())
+        names = [n.nodeName() for n in nodes]
+        kernels = sorted(n for n in names if n in _PYTHON_NODES)
+        assert kernels == ["FlatMapCoGroupsInPandas", "MapInPandas",
+                           "MapInPandas"], (name, names)
+        assert "TakeOrderedAndProject" not in names, (name, names)
+        assert "GlobalLimit" not in names, (name, names)
+        assert not [n for n in nodes if _single_partition(n)], (name, names)
+
+
+def test_ann_ivfpq_job_count(spark):
+    """IVF+PQ trains and serves in few, coarse jobs: one collect for
+    both inits, one per Lloyd round (two k-means, one PQ), and the
+    serving plan's shuffle stages. The r6 chain of blocked cogroups and
+    eager checkpoints ran 38 jobs. Counted under a job group through
+    statusTracker, as the benchmark's tracer counts them."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ann_ivfpq_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ann_ivfpq job count")
+    try:
+        QUERIES["ann_ivfpq"]["fn"](spark, SF).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 20, len(jobs)
+
+
+def test_cusum_staging_has_no_single_partition_operator(spark):
+    """streaming_cusum_state cuts its chunk files at equal-width time
+    ranges: the chunk plan has no unpartitioned Window and no Exchange
+    to one partition (the global ntile staging had one of each), only
+    the hash Exchange that gives every chunk one writer task."""
+    from pyspark.sql import functions as F
+
+    from sentinel2_crop_trait_timeseries_spark.operators.rollup import (
+        _CENTS,
+        _US,
+    )
+    from sentinel2_crop_trait_timeseries_spark.streaming.cusum_stream import (
+        _time_chunks,
+    )
+
+    e = spark.read.parquet(f"{SF}/events.parquet").select(
+        "user_id", "event_id", F.expr(_US).alias("ts_us"),
+        F.expr(_CENTS).alias("cents"),
+    )
+    df = _time_chunks(e, 4)
+    assert sorted(r["chunk"] for r in df.select("chunk").distinct().collect()
+                  ) == [1, 2, 3, 4]
+    df.collect()
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    names = [n.nodeName() for n in nodes]
+    assert not [n for n in nodes if _single_partition(n)], names
+    assert not [n for n in names if n.startswith("Window")], names
+    exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 1, names
+    assert "chunk" in exchanges[0].outputPartitioning().toString()
 
 
 def test_hamming_masks_pure():
