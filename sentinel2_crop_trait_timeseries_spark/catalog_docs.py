@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from sentinel2_crop_trait_timeseries_spark.catalog import _q, _spread, _t
 from sentinel2_crop_trait_timeseries_spark.operators.ann import dot, norm
+from sentinel2_crop_trait_timeseries_spark.streaming import dedup_stream
 
 # ---------------------------------------------------------------------
 # shared helpers
@@ -2372,11 +2373,7 @@ def streaming_dedup_probe(spark, sf_dir):
     microbatch path emits exactly the batch pairs. Arrivals are
     broadcast per microbatch; the corpus index never moves
     (streaming/dedup_stream.py)."""
-    from sentinel2_crop_trait_timeseries_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-    )
-
-    return run_dedup_stream_once(spark, sf_dir)
+    return dedup_stream.run_dedup_stream_once(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------

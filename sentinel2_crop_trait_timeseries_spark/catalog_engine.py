@@ -34,7 +34,9 @@ from sentinel2_crop_trait_timeseries_spark.operators.rollup import (
     _sec,
 )
 from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
+    run_cascade_stream_once,
     run_file_stream_once,
+    run_session_stream_once,
 )
 
 
@@ -167,6 +169,22 @@ def streaming_rollup_hourly(spark, sf_dir):
     )
 
 
+def _rounded_tier(res):
+    """A streaming cascade tier in the oracle's shape: sums and means
+    rounded to 4 places (mean = sum / n, the algebraic merge)."""
+    return res.select(
+        "event_type",
+        "bucket_ts",
+        "n",
+        F.round(F.lit(1e-9) + F.col("sum_value"), 4).alias("sum_value"),
+        F.round(
+            F.lit(1e-9) + F.col("sum_value") / F.col("n"), 4
+        ).alias("mean_value"),
+        "min_value",
+        "max_value",
+    )
+
+
 @_q(
     "streaming_rollup_daily",
     f"""
@@ -190,22 +208,7 @@ def streaming_rollup_daily(spark, sf_dir):
     merge reproduce the relational daily tier exactly, closing the
     one §2.9 concept (hierarchical re-aggregation) that had only a
     batch twin through r3."""
-    from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
-        run_cascade_stream_once,
-    )
-
-    res = run_cascade_stream_once(spark, sf_dir)
-    return res.select(
-        "event_type",
-        "bucket_ts",
-        "n",
-        F.round(F.lit(1e-9) + F.col("sum_value"), 4).alias("sum_value"),
-        F.round(
-            F.lit(1e-9) + F.col("sum_value") / F.col("n"), 4
-        ).alias("mean_value"),
-        "min_value",
-        "max_value",
-    )
+    return _rounded_tier(run_cascade_stream_once(spark, sf_dir))
 
 
 @_q(
@@ -230,22 +233,7 @@ def streaming_rollup_weekly(spark, sf_dir):
     cascade tier-for-tier. Monday-anchored weeks via the same epoch
     arithmetic as the batch _SQL_WEEK; oracle is the weekly GROUP BY
     over raw events."""
-    from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
-        run_cascade_stream_once,
-    )
-
-    res = run_cascade_stream_once(spark, sf_dir, tier="weekly")
-    return res.select(
-        "event_type",
-        "bucket_ts",
-        "n",
-        F.round(F.lit(1e-9) + F.col("sum_value"), 4).alias("sum_value"),
-        F.round(
-            F.lit(1e-9) + F.col("sum_value") / F.col("n"), 4
-        ).alias("mean_value"),
-        "min_value",
-        "max_value",
-    )
+    return _rounded_tier(run_cascade_stream_once(spark, sf_dir, tier="weekly"))
 
 
 @_q(
@@ -284,10 +272,6 @@ def streaming_sessionize(spark, sf_dir):
     state machine equals the relational definition. window.end is
     last-event + gap by Spark's session semantics; the oracle adds the
     gap to max(ts) the same way."""
-    from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
-        run_session_stream_once,
-    )
-
     res = run_session_stream_once(spark, sf_dir)
     return res.select(
         "user_id",

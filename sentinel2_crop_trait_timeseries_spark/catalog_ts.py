@@ -45,6 +45,11 @@ from sentinel2_crop_trait_timeseries_spark.operators.rollup import (
     _bucket_sec,
     _sec,
 )
+from sentinel2_crop_trait_timeseries_spark.streaming import (
+    asof_stream,
+    cusum_stream,
+    join_stream,
+)
 
 # DuckDB twins of the epoch-micros / cents keys
 _SQL_US = "epoch_us(ts)"
@@ -1335,11 +1340,7 @@ def streaming_asof_probe(spark, sf_dir):
     microbatch; the index — arbitrarily large at scale — is
     localCheckpoint-ed once and never moves (the dedup-probe
     contract, streaming/dedup_stream.py)."""
-    from sentinel2_crop_trait_timeseries_spark.streaming.asof_stream import (
-        run_asof_stream_once,
-    )
-
-    return run_asof_stream_once(spark, sf_dir)
+    return asof_stream.run_asof_stream_once(spark, sf_dir)
 
 
 # =====================================================================
@@ -1366,11 +1367,7 @@ def streaming_cusum_state(spark, sf_dir):
     arrivals. Oracle = the batch recursive CTE; a hash match proves the
     cross-batch state path equals the batch recursion bit-for-bit
     (all-BIGINT state — nothing to hide drift in)."""
-    from sentinel2_crop_trait_timeseries_spark.streaming.cusum_stream import (
-        run_cusum_stream_once,
-    )
-
-    return run_cusum_stream_once(spark, sf_dir)
+    return cusum_stream.run_cusum_stream_once(spark, sf_dir)
 
 
 # =====================================================================
@@ -2256,11 +2253,7 @@ def streaming_interval_join(spark, sf_dir):
     with availableNow the append-mode stream must emit exactly those
     rows — a hash match proves no row is dropped, duplicated, or
     mis-joined by the state machinery."""
-    from sentinel2_crop_trait_timeseries_spark.streaming.join_stream import (
-        run_interval_join_stream_once,
-    )
-
-    return run_interval_join_stream_once(spark, sf_dir)
+    return join_stream.run_interval_join_stream_once(spark, sf_dir)
 
 
 # =====================================================================

@@ -14,32 +14,32 @@ predicate, keeping the max-ts match per arrival. The index — the big
 side — never moves; per-arrival work is bounded by that user's own
 reference history (same skew contract as the batch union-tag plan).
 Results append to a parquet sink, so repeated triggers accumulate
-exactly the batch ASOF rows for the same arrival set.
+exactly the batch ASOF rows for the same arrival set. The sink is a
+scratch directory that the returned frame reads lazily, so it stays
+until the process exits (see streaming/__init__.py).
 """
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sentinel2_crop_trait_timeseries_spark.operators.rollup import _CENTS, _US
+from sentinel2_crop_trait_timeseries_spark.streaming import (
+    file_stream,
+    run_available,
+    scratch_dir,
+)
 
 
-def run_asof_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    mod: int = 10,
-) -> DataFrame:
-    """Stream the arrival slice (non-click events with event_id % mod
+def run_asof_stream_once(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream the arrival slice (non-click events with event_id % 10
     == 0) against the static click index; returns the batch-ASOF
     columns (event_id, user_id, event_type, ts_us, click_cents,
     staleness_us) for exactly the arrival rows."""
-    d = spark.read.parquet(f"{sf_dir}/{file_name}")
     index = (
-        d.filter(F.col("event_type") == "click")
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .filter(F.col("event_type") == "click")
         .select(
             "user_id",
             F.expr(_US).alias("ref_us"),
@@ -50,15 +50,9 @@ def run_asof_stream_once(
         .localCheckpoint(eager=True)
     )
 
-    out_path = tempfile.mkdtemp(prefix="s2tt_stream_asof_")
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("pathGlobFilter", file_name)
-        .parquet(sf_dir)
-        .filter(
-            (F.col("event_type") != "click")
-            & (F.col("event_id") % mod == 0)
-        )
+    out_path = scratch_dir("s2tt_stream_asof_")
+    stream = file_stream(spark, sf_dir, "events.parquet").filter(
+        (F.col("event_type") != "click") & (F.col("event_id") % 10 == 0)
     )
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
@@ -97,10 +91,5 @@ def run_asof_stream_once(
         )
         out.write.mode("append").parquet(out_path)
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available(stream.writeStream.foreachBatch(probe))
     return spark.read.parquet(out_path)

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pandas as pd
 
@@ -41,6 +40,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sentinel2_crop_trait_timeseries_spark.operators.rollup import _CENTS, _US
+from sentinel2_crop_trait_timeseries_spark.streaming import (
+    run_available,
+    scratch_dir,
+)
 
 OUT_SCHEMA = (
     "user_id long, n_events long, n_over long, first_over_ts_us long, "
@@ -162,13 +165,13 @@ def _time_chunks(e: DataFrame, n_chunks: int) -> DataFrame:
     ).repartition(n_chunks, "chunk")
 
 
-def _stage(spark: SparkSession, sf_dir: str, file_name: str, n_chunks: int):
-    """Stage the events fixture for a per-key-ordered stream: returns
-    (schema, targets, stage_dir, chunk_dirs). targets is each user's
-    offline detector target (the doubled exact median), checkpointed;
-    chunk_dirs are the non-empty time-range directories under
-    stage_dir, oldest first, with file mtimes pinned in that order."""
-    e = spark.read.parquet(f"{sf_dir}/{file_name}").select(
+def _stage(spark: SparkSession, sf_dir: str, n_chunks: int, stage: str):
+    """Stage the events fixture under ``stage`` for a per-key-ordered
+    stream: returns (schema, targets, chunk_dirs). targets is each
+    user's offline detector target (the doubled exact median),
+    checkpointed; chunk_dirs are the non-empty time-range directories
+    under stage, oldest first, with file mtimes pinned in that order."""
+    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "user_id",
         "event_id",
         F.expr(_US).alias("ts_us"),
@@ -186,49 +189,42 @@ def _stage(spark: SparkSession, sf_dir: str, file_name: str, n_chunks: int):
         ).alias("target_x2"),
     ).localCheckpoint(eager=True)
 
-    stage = tempfile.mkdtemp(prefix="s2tt_cusum_stage_")
-    try:
-        _time_chunks(e, n_chunks).write.mode("overwrite").partitionBy(
-            "chunk"
-        ).parquet(stage)
-        chunk_dirs = []
-        for c in range(1, n_chunks + 1):
-            path = os.path.join(stage, f"chunk={c}")
-            if not os.path.isdir(path):
-                continue
-            t = 1_700_000_000 + c
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    os.utime(os.path.join(root, f), (t, t))
-            os.utime(path, (t, t))
-            chunk_dirs.append(path)
-    except BaseException:
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
+    _time_chunks(e, n_chunks).write.mode("overwrite").partitionBy(
+        "chunk"
+    ).parquet(stage)
+    chunk_dirs = []
+    for c in range(1, n_chunks + 1):
+        path = os.path.join(stage, f"chunk={c}")
+        if not os.path.isdir(path):
+            continue
+        t = 1_700_000_000 + c
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                os.utime(os.path.join(root, f), (t, t))
+        os.utime(path, (t, t))
+        chunk_dirs.append(path)
     # the chunk files hold e's columns; `chunk` is a directory name only
     # (recursiveFileLookup on the stream disables partition discovery)
-    return e.schema, targets, stage, chunk_dirs
+    return e.schema, targets, chunk_dirs
 
 
-def _stream(spark: SparkSession, schema, path: str, targets) -> DataFrame:
-    return (
+def _cusum_stream(spark: SparkSession, schema, path: str,
+                  targets) -> DataFrame:
+    """cusum_stateful over the chunk files under ``path``, one file per
+    micro-batch, with each user's target broadcast onto its rows."""
+    from sentinel2_crop_trait_timeseries_spark.catalog_ts import (
+        _CUSUM_H,
+        _CUSUM_K,
+    )
+
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
         .parquet(path)
         .join(F.broadcast(targets), "user_id")
     )
-
-
-def _run_available(writer) -> None:
-    """Start an availableNow query and wait until it has processed every
-    file; the query is stopped on the way out even if the wait fails."""
-    q = writer.trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    return cusum_stateful(stream, _CUSUM_K, _CUSUM_H)
 
 
 def _final_state(upd: DataFrame) -> DataFrame:
@@ -242,10 +238,7 @@ def _final_state(upd: DataFrame) -> DataFrame:
 
 
 def run_cusum_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    n_chunks: int = 4,
+    spark: SparkSession, sf_dir: str, n_chunks: int = 4
 ) -> DataFrame:
     """Drive the streaming CUSUM over the events fixture split into
     n_chunks time-range files (one micro-batch each, so state
@@ -253,17 +246,12 @@ def run_cusum_stream_once(
     ``s2tt_stream_cusum``; return the FINAL state row per user (the
     last update, selected by max n_events). The staged files are
     removed once the query has terminated."""
-    from sentinel2_crop_trait_timeseries_spark.catalog_ts import (
-        _CUSUM_H,
-        _CUSUM_K,
-    )
-
-    schema, targets, stage, _ = _stage(spark, sf_dir, file_name, n_chunks)
+    stage = scratch_dir("s2tt_cusum_stage_")
     name = "s2tt_stream_cusum"
     try:
-        _run_available(
-            cusum_stateful(_stream(spark, schema, stage, targets),
-                           _CUSUM_K, _CUSUM_H)
+        schema, targets, _ = _stage(spark, sf_dir, n_chunks, stage)
+        run_available(
+            _cusum_stream(spark, schema, stage, targets)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("update")
@@ -274,11 +262,7 @@ def run_cusum_stream_once(
 
 
 def run_cusum_stream_resumable(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    n_chunks: int = 4,
-    split_at: int = 2,
+    spark: SparkSession, sf_dir: str, n_chunks: int = 4, split_at: int = 2
 ) -> DataFrame:
     """Checkpoint-recovery twin of run_cusum_stream_once: process the
     first `split_at` chunks, STOP the query, then start a NEW query on
@@ -291,17 +275,10 @@ def run_cusum_stream_resumable(
     user; the staging, live and checkpoint directories are removed
     once both queries have terminated, the sink stays because the
     returned DataFrame reads it lazily."""
-    from sentinel2_crop_trait_timeseries_spark.catalog_ts import (
-        _CUSUM_H,
-        _CUSUM_K,
-    )
-
-    schema, targets, stage, chunk_dirs = _stage(
-        spark, sf_dir, file_name, n_chunks
-    )
-    live = tempfile.mkdtemp(prefix="s2tt_cusum_live_")
-    ckpt = tempfile.mkdtemp(prefix="s2tt_cusum_ckpt_")
-    sink = tempfile.mkdtemp(prefix="s2tt_cusum_sink_")
+    stage = scratch_dir("s2tt_cusum_stage_")
+    live = scratch_dir("s2tt_cusum_live_")
+    ckpt = scratch_dir("s2tt_cusum_ckpt_")
+    sink = scratch_dir("s2tt_cusum_sink_")
 
     def _phase() -> None:
         # batchId-keyed OVERWRITE is the canonical exactly-once
@@ -309,9 +286,8 @@ def run_cusum_stream_resumable(
         # directory instead of appending a duplicate (batch ids are
         # monotonic across checkpoint recoveries, so phases never
         # collide)
-        _run_available(
-            cusum_stateful(_stream(spark, schema, live, targets),
-                           _CUSUM_K, _CUSUM_H)
+        run_available(
+            _cusum_stream(spark, schema, live, targets)
             .writeStream.foreachBatch(
                 lambda b, i: b.write.mode("overwrite").parquet(
                     os.path.join(sink, f"batch={i}")
@@ -322,6 +298,7 @@ def run_cusum_stream_resumable(
         )
 
     try:
+        schema, targets, chunk_dirs = _stage(spark, sf_dir, n_chunks, stage)
         for path in chunk_dirs[:split_at]:
             shutil.move(path, live)
         _phase()  # phase A, then the query object is gone ("crash")
@@ -332,9 +309,5 @@ def run_cusum_stream_resumable(
         for path in (stage, live, ckpt):
             shutil.rmtree(path, ignore_errors=True)
 
-    upd = (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(sink)
-    )
+    upd = spark.read.option("recursiveFileLookup", "true").parquet(sink)
     return _final_state(upd)

@@ -13,7 +13,9 @@ the index on (band, sig) — the same no-all-pairs LSH candidate plan as
 the batch `dedup_minhash_lsh` (catalog_docs.py), restricted to
 new-vs-corpus pairs. Candidates append to a parquet sink, so repeated
 triggers accumulate exactly the pairs batch dedup would emit for the
-same arrival set. Reference analog: the reference's pipeline
+same arrival set. The sink is one scratch directory per call; the
+returned frame reads it lazily, so it stays until the process exits
+(see streaming/__init__.py). Reference analog: the reference's pipeline
 re-processes per-parcel scenes incrementally against previously fitted
 state (src/processing/process_parcels.py resume logic); this is that
 concept for the dedup graph.
@@ -21,25 +23,26 @@ concept for the dedup graph.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sentinel2_crop_trait_timeseries_spark.streaming import (
+    file_stream,
+    run_available,
+    scratch_dir,
+)
 
-def run_dedup_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "documents.parquet",
-    mod: int = 10,
-) -> DataFrame:
-    """Stream the arrival slice (doc_id % mod == 0) of the documents
-    table against the band index of the rest (doc_id % mod != 0);
+
+def run_dedup_stream_once(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream the arrival slice (doc_id % 10 == 0) of the documents
+    table against the band index of the rest (doc_id % 10 != 0);
     returns (doc_new, doc_idx, n_shared_bands) candidate pairs.
 
     availableNow trigger + append parquet sink: the run drains the
-    source to completion and is idempotent per temp sink; at scale the
-    sink is an Iceberg table MERGEd on (doc_new, doc_idx, batch).
+    source to completion into a fresh scratch directory per call,
+    which the returned frame reads lazily and which therefore stays
+    until the process exits; at scale the sink is an Iceberg table
+    MERGEd on (doc_new, doc_idx, batch).
 
     r6 scale fix: the emitted pair set is inherently quadratic in
     duplicate-class size (78M rows at sf1.0), but docs with an
@@ -55,11 +58,11 @@ def run_dedup_stream_once(
         _minhash_profiles,
     )
 
-    d = spark.read.parquet(f"{sf_dir}/{file_name}")
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # corpus index at CLASS granularity: one profile pass, classes
     # keyed by min member doc_id; the doc->class map re-expands pairs
     idx_prof = (
-        _minhash_profiles(d.filter(F.col("doc_id") % mod != 0))
+        _minhash_profiles(d.filter(F.col("doc_id") % 10 != 0))
         .localCheckpoint(eager=True)
     )
     idx_cls = idx_prof.groupBy("sig0", "sig1").agg(
@@ -70,45 +73,32 @@ def run_dedup_stream_once(
         .select(F.col("doc_id").alias("doc_idx"), "cls")
         .localCheckpoint(eager=True)
     )
-    idx_bands = idx_cls.select(
-        "cls",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), F.col("sig0").alias("sig")),
-                F.struct(F.lit(1).alias("band"), F.col("sig1").alias("sig")),
-            )
-        ).alias("bs"),
-    ).select("cls", "bs.band", "bs.sig").localCheckpoint(eager=True)
+    # a class's two LSH bands, one (band, sig) row each
+    bands = F.inline(
+        F.array(
+            F.struct(F.lit(0).alias("band"), F.col("sig0").alias("sig")),
+            F.struct(F.lit(1).alias("band"), F.col("sig1").alias("sig")),
+        )
+    )
+    idx_bands = idx_cls.select("cls", bands).localCheckpoint(eager=True)
 
-    out_path = tempfile.mkdtemp(prefix="s2tt_stream_dedup_")
+    out_path = scratch_dir("s2tt_stream_dedup_")
     pairs_path = f"{out_path}/class_pairs"
     members_path = f"{out_path}/arrival_members"
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("pathGlobFilter", file_name)
-        .parquet(sf_dir)
-        .filter(F.col("doc_id") % mod == 0)
+    stream = file_stream(spark, sf_dir, "documents.parquet").filter(
+        F.col("doc_id") % 10 == 0
     )
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         # broadcast the ARRIVAL CLASSES (a microbatch is small); the
         # corpus index — arbitrarily large at scale — never moves
         aprof = _minhash_profiles(batch_df).localCheckpoint(eager=True)
-        acls = aprof.select("sig0", "sig1").distinct()
-        abands = acls.select(
-            F.col("sig0").alias("a_sig0"), F.col("sig1").alias("a_sig1"),
-            F.explode(
-                F.array(
-                    F.struct(F.lit(0).alias("band"),
-                             F.col("sig0").alias("sig")),
-                    F.struct(F.lit(1).alias("band"),
-                             F.col("sig1").alias("sig")),
-                )
-            ).alias("bs"),
-        ).select("a_sig0", "a_sig1", "bs.band", "bs.sig")
+        abands = aprof.select("sig0", "sig1").distinct().select(
+            "sig0", "sig1", bands
+        )
         cpairs = (
             idx_bands.join(F.broadcast(abands), ["band", "sig"])
-            .groupBy("a_sig0", "a_sig1", "cls")
+            .groupBy("sig0", "sig1", "cls")
             .agg(F.count("*").alias("n_shared_bands"))
             .withColumn("batch", F.lit(batch_id))
         )
@@ -117,12 +107,7 @@ def run_dedup_stream_once(
             "append"
         ).parquet(members_path)
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available(stream.writeStream.foreachBatch(probe))
     # fan the class pairs back out to per-doc pairs: every arrival doc
     # of a class pairs with every member of the matched index class
     cpairs = spark.read.parquet(pairs_path)
@@ -130,11 +115,7 @@ def run_dedup_stream_once(
         F.col("doc_id").alias("doc_new"), "sig0", "sig1", "batch"
     )
     return (
-        members.join(
-            cpairs.withColumnRenamed("a_sig0", "sig0")
-            .withColumnRenamed("a_sig1", "sig1"),
-            ["sig0", "sig1", "batch"],
-        )
+        members.join(cpairs, ["sig0", "sig1", "batch"])
         .join(F.broadcast(idx_map), "cls")
         .select("doc_new", "doc_idx", "n_shared_bands")
     )

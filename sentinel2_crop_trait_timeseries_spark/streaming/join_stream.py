@@ -13,7 +13,8 @@ which is the 100 TB failure mode this operator exists to avoid. With
 trigger(availableNow) the run drains the source and the append-mode
 output equals the batch interval join of the same slices — which is
 exactly what the DuckDB oracle computes (catalog_ts.streaming
-_interval_join).
+_interval_join). Output goes to an append-mode memory sink, so a run
+leaves no directory behind.
 
 Reference analog: entry point A joins scene observations against the
 meteo spine per campaign (src/04_reconstruct_s2_traits.py:216); run
@@ -23,37 +24,26 @@ staleness horizon.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sentinel2_crop_trait_timeseries_spark.operators.rollup import _CENTS
-
-_BACK_US = 21_600_000_000  # 6 h backward horizon
+from sentinel2_crop_trait_timeseries_spark.streaming import (
+    file_stream,
+    run_available,
+)
 
 
 def run_interval_join_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    mod: int = 5,
+    spark: SparkSession, sf_dir: str, mod: int = 5
 ) -> DataFrame:
     """Stream-stream join views (event_id % mod == 0, non-click)
-    against clicks within the backward 6-hour horizon per user;
-    returns exactly the batch interval-join rows for the same slices.
+    against clicks within the backward 6-hour horizon per user into the
+    memory table ``s2tt_stream_join``; returns exactly the batch
+    interval-join rows for the same slices.
     """
-    schema = spark.read.parquet(f"{sf_dir}/{file_name}").schema
-
-    def _src():
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", file_name)
-            .parquet(sf_dir)
-        )
-
     views = (
-        _src()
+        file_stream(spark, sf_dir, "events.parquet")
         .filter((F.col("event_type") != "click") & (F.col("event_id") % mod == 0))
         .select(
             F.col("event_id").alias("view_id"),
@@ -63,7 +53,7 @@ def run_interval_join_stream_once(
         .withWatermark("vts", "1 hour")
     )
     clicks = (
-        _src()
+        file_stream(spark, sf_dir, "events.parquet")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -92,17 +82,10 @@ def run_interval_join_stream_once(
         ).alias("lag_us"),
     )
 
-    out_path = tempfile.mkdtemp(prefix="s2tt_stream_join_")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="s2tt_stream_join_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    name = "s2tt_stream_join"
+    run_available(
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return spark.table(name)

@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sentinel2_crop_trait_timeseries_spark.operators.rollup import _bucket_sec
+from sentinel2_crop_trait_timeseries_spark.streaming import (
+    file_stream,
+    run_available,
+    scratch_dir,
+)
 
 
 def streaming_hourly_rollup(
@@ -46,37 +51,36 @@ def streaming_hourly_rollup(
     )
 
 
-def run_file_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    keys: list[str] = ("event_type",),
-    query_name: str = "s2tt_stream_hourly",
-) -> DataFrame:
-    """Stream a parquet file source to completion (availableNow) into a
-    memory sink; return the final windowed aggregate as a batch frame.
+def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # event time must be TIMESTAMP (not NTZ); session tz is UTC
+    return file_stream(spark, sf_dir, "events.parquet").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
+def _memory_rollup(spark: SparkSession, sf_dir: str, rollup,
+                   name: str) -> DataFrame:
+    """Stream the events file through ``rollup`` to completion
+    (availableNow) into the memory table ``name``; return that table.
 
     Complete output mode so every window is emitted regardless of the
     final watermark position (matches the batch/oracle result exactly).
     """
-    schema = spark.read.parquet(f"{sf_dir}/{file_name}").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_name)
-        .parquet(sf_dir)
-        # event time must be TIMESTAMP (not NTZ); session tz is UTC
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = streaming_hourly_rollup(stream, keys=list(keys))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
+    run_available(
+        rollup(_event_stream(spark, sf_dir))
+        .writeStream.format("memory")
+        .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return spark.table(name)
+
+
+def run_file_stream_once(
+    spark: SparkSession, sf_dir: str, query_name: str = "s2tt_stream_hourly"
+) -> DataFrame:
+    """The hourly tier per event_type as a streaming aggregate
+    (``streaming_hourly_rollup``), returned as a batch frame."""
+    return _memory_rollup(spark, sf_dir, streaming_hourly_rollup, query_name)
 
 
 def streaming_session_rollup(
@@ -102,40 +106,16 @@ def streaming_session_rollup(
     )
 
 
-def run_session_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    query_name: str = "s2tt_stream_sessions",
-) -> DataFrame:
-    """Stream a parquet file source through session windows to
-    completion (availableNow, complete mode, memory sink)."""
-    schema = spark.read.parquet(f"{sf_dir}/{file_name}").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_name)
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+def run_session_stream_once(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user session windows (``streaming_session_rollup``) as a
+    streaming aggregate, returned as a batch frame."""
+    return _memory_rollup(
+        spark, sf_dir, streaming_session_rollup, "s2tt_stream_sessions"
     )
-    agg = streaming_session_rollup(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
 
 
 def run_cascade_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    keys: list[str] = ("event_type",),
-    query_name: str = "s2tt_stream_daily",
-    tier: str = "daily",
+    spark: SparkSession, sf_dir: str, tier: str = "daily"
 ) -> DataFrame:
     """Streaming CASCADE tiers: the daily AND weekly rollups fed FROM
     the hourly streaming aggregate — the streaming twin of the batch
@@ -152,35 +132,30 @@ def run_cascade_stream_once(
     aggregate each trigger and overwrites both tier paths; the last
     availableNow trigger leaves the final answer. At scale the same
     shape appends finalized (watermark-expired) hourly windows and
-    MERGEs the tiers instead of overwriting. Sinks are plain parquet
-    paths (no metastore) so repeated runs in any session are
-    idempotent. Returns the requested ``tier`` ("daily"/"weekly")."""
-    import tempfile
-
-    paths = {t: tempfile.mkdtemp(prefix=f"{query_name}_{t}_")
-             for t in ("daily", "weekly")}
-    schema = spark.read.parquet(f"{sf_dir}/{file_name}").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_name)
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    MERGEs the tiers instead of overwriting. Both tier sinks are plain
+    parquet paths (no metastore) in one fresh scratch directory per
+    call; the returned frame reads its tier lazily, so the directory
+    stays until the process exits. Returns the requested ``tier``
+    ("daily"/"weekly")."""
+    out = scratch_dir("s2tt_stream_cascade_")
+    paths = {t: f"{out}/{t}" for t in ("daily", "weekly")}
+    hourly = streaming_hourly_rollup(_event_stream(spark, sf_dir))
+    merged = (
+        F.sum("n").alias("n"),
+        F.sum("sum_value").alias("sum_value"),
+        F.min("min_value").alias("min_value"),
+        F.max("max_value").alias("max_value"),
     )
-    hourly = streaming_hourly_rollup(stream, keys=list(keys))
 
     def reagg(batch_df: DataFrame, batch_id: int) -> None:
         daily = (
             batch_df.groupBy(
-                *keys, F.window(F.col("win.start"), "1 day").alias("day")
+                "event_type",
+                F.window(F.col("win.start"), "1 day").alias("day"),
             )
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("sum_value").alias("sum_value"),
-                F.min("min_value").alias("min_value"),
-                F.max("max_value").alias("max_value"),
-            )
+            .agg(*merged)
             .select(
-                *keys,
+                "event_type",
                 F.col("day.start").cast("long").alias("bucket_ts"),
                 "n", "sum_value", "min_value", "max_value",
             )
@@ -188,24 +163,13 @@ def run_cascade_stream_once(
         daily.write.mode("overwrite").parquet(paths["daily"])
         d = spark.read.parquet(paths["daily"])  # weekly re-aggs the tier below
         week_ts = _bucket_sec(F.col("bucket_ts"), "week")
-        weekly = (
-            d.groupBy(*keys, week_ts.alias("bucket_ts"))
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("sum_value").alias("sum_value"),
-                F.min("min_value").alias("min_value"),
-                F.max("max_value").alias("max_value"),
-            )
-        )
-        weekly.write.mode("overwrite").parquet(paths["weekly"])
+        d.groupBy("event_type", week_ts.alias("bucket_ts")).agg(
+            *merged
+        ).write.mode("overwrite").parquet(paths["weekly"])
 
-    q = (
-        hourly.writeStream.foreachBatch(reagg)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    run_available(
+        hourly.writeStream.foreachBatch(reagg).outputMode("complete")
     )
-    q.awaitTermination()
     return spark.read.parquet(paths[tier])
 
 
@@ -248,22 +212,19 @@ def running_totals(stream: DataFrame, key: str = "user_id",
 
 
 def run_stateful_stream_once(spark: SparkSession, input_dir: str,
-                             schema, query_name: str = "s2tt_running",
-                             max_files_per_trigger: int = 1) -> DataFrame:
+                             schema, query_name: str = "s2tt_running"
+                             ) -> DataFrame:
     """Drive running_totals over a file stream one file per micro-batch
     (so state genuinely carries across batches); return all updates."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "1")
         .parquet(input_dir)
     )
-    q = (
+    run_available(
         running_totals(stream)
         .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(query_name)

@@ -479,7 +479,7 @@ def test_streaming_interval_join_empty_arrivals(spark):
     )
 
     # no event_id divides 10^9 in the fixture -> zero arrivals; the
-    # sink's metadata log still defines an empty 7-column result
+    # memory sink still defines an empty 7-column result
     df = run_interval_join_stream_once(spark, SF, mod=10**9)
     assert df.count() == 0
     assert len(df.columns) == 7
@@ -544,23 +544,6 @@ def test_dq_expectations_independent_recompute(spark):
         assert row[col] >= 0
 
 
-def test_cusum_stream_checkpoint_recovery(spark):
-    from sentinel2_crop_trait_timeseries_spark.streaming.cusum_stream import (
-        run_cusum_stream_once,
-        run_cusum_stream_resumable,
-    )
-
-    one_shot = sorted(
-        map(tuple, run_cusum_stream_once(spark, SF).collect())
-    )
-    resumed = sorted(
-        map(tuple, run_cusum_stream_resumable(spark, SF).collect())
-    )
-    # a stop + new-query restart from the checkpoint must land on the
-    # exact same per-user final state as the uninterrupted run
-    assert resumed == one_shot and len(one_shot) > 0
-
-
 def test_streaming_cusum_shared_range_key(spark, tmp_path):
     """State is keyed by user range, pmod(user_id, _USER_RANGES): two
     users share every key here, and one of them has no rows in the
@@ -570,10 +553,10 @@ def test_streaming_cusum_shared_range_key(spark, tmp_path):
     live or checkpoint directory behind. (At sf0.001 user ids are 0-14,
     so the contract fixture never shares a key.)"""
     import glob
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from sentinel2_crop_trait_timeseries_spark import streaming
     from sentinel2_crop_trait_timeseries_spark.operators.rollup import _US
     from sentinel2_crop_trait_timeseries_spark.streaming import (
         cusum_stream as cs,
@@ -596,9 +579,10 @@ def test_streaming_cusum_shared_range_key(spark, tmp_path):
     ev.filter(~gap).withColumn("user_id", uid).drop("ts_us").write.parquet(
         str(tmp_path / "events.parquet")
     )
-    def staged():
-        return {p for kind in ("stage", "live", "ckpt") for p in glob.glob(
-            os.path.join(tempfile.gettempdir(), f"s2tt_cusum_{kind}_*"))}
+    def staged(kinds=("stage", "live", "ckpt")):
+        # every driver directory lives under the process's scratch root
+        return {p for kind in kinds for p in glob.glob(os.path.join(
+            streaming._ROOT or "", f"s2tt_cusum_{kind}_*"))}
 
     before = staged()
 
@@ -628,6 +612,8 @@ def test_streaming_cusum_shared_range_key(spark, tmp_path):
         resumed.toPandas()[cols].sort_values(cols).reset_index(drop=True),
         want, check_dtype=False,
     )
+    # the glob looks in the right place: the resumable sink is there
+    assert staged(("sink",))
     assert staged() == before
 
 

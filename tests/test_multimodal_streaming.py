@@ -10,6 +10,7 @@ from sentinel2_crop_trait_timeseries_spark.operators.multimodal import (
 )
 from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
     run_file_stream_once,
+    run_stateful_stream_once,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -54,11 +55,6 @@ def test_streaming_equals_batch(spark):
 
 
 def test_stateful_running_totals_across_microbatches(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
-        run_stateful_stream_once,
-    )
-
     ev = spark.read.parquet(f"{SF}/events.parquet").select("user_id", "ts", "value")
     d = str(tmp_path / "stream_in")
     # two files -> two micro-batches with maxFilesPerTrigger=1

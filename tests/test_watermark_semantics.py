@@ -22,11 +22,11 @@ Delivery order (mtime-pinned, one file per trigger):
 
 import datetime
 import os
-import tempfile
 
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
+from sentinel2_crop_trait_timeseries_spark.streaming import run_available
 from sentinel2_crop_trait_timeseries_spark.streaming.rollup_stream import (
     streaming_hourly_rollup,
 )
@@ -49,14 +49,14 @@ _SCHEMA = (
 )
 
 
-def test_watermark_drops_exactly_the_too_late_rows(spark):
+def test_watermark_drops_exactly_the_too_late_rows(spark, tmp_path):
     chunks = [
         [_ev(1, 10, 0), _ev(2, 10, 30), _ev(3, 11, 59)],
         [_ev(4, 14, 0), _ev(5, 14, 30)],
         [_ev(6, 10, 15), _ev(7, 13, 45)],
         [_ev(8, 10, 45), _ev(9, 12, 15)],
     ]
-    in_dir = tempfile.mkdtemp(prefix="s2tt_wm_")
+    in_dir = str(tmp_path)
     for i, rows in enumerate(chunks, 1):
         p = os.path.join(in_dir, f"chunk_{i:02d}")
         spark.createDataFrame(rows, _SCHEMA).coalesce(1).write.parquet(p)
@@ -74,7 +74,7 @@ def test_watermark_drops_exactly_the_too_late_rows(spark):
         .parquet(in_dir)
     )
     updates = []
-    q = (
+    run_available(
         streaming_hourly_rollup(stream, watermark="1 hour")
         .writeStream.foreachBatch(
             lambda b, i: updates.extend(
@@ -85,10 +85,7 @@ def test_watermark_drops_exactly_the_too_late_rows(spark):
             )
         )
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     final = {}
     for _i, h, n in updates:
