@@ -23,11 +23,15 @@ Portability rules (so the driver's order-insensitive value-hash matches):
 
 from __future__ import annotations
 
+import math
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sentinel2_crop_trait_timeseries_spark.functions.response import (
+    PARAMS_BY_GRANULARITY,
+)
 from sentinel2_crop_trait_timeseries_spark.operators.rollup import (
     _bucket_sec,
     _sec,
@@ -95,19 +99,21 @@ _SQL_WEEK = (
 # Rollup tiers (SURVEY §2.4: temporal downsample; engine rollup operator)
 # =====================================================================
 
-@_q(
-    "rollup_hourly",
-    f"""
+def _rollup_sql(bucket: str) -> str:
+    """Oracle of the tier rollups: every tier straight from the events."""
+    return f"""
     SELECT event_type,
-           {_SQL_HOUR} AS bucket_ts,
+           {bucket} AS bucket_ts,
            count(*) AS n,
            round(1e-9 + sum(value), 4) AS sum_value,
            round(1e-9 + avg(value), 4) AS mean_value,
            min(value) AS min_value,
            max(value) AS max_value
     FROM events GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@_q("rollup_hourly", _rollup_sql(_SQL_HOUR))
 def rollup_hourly(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     hour = _bucket_sec(_sec("ts"), 3600)
@@ -120,34 +126,26 @@ def rollup_hourly(spark, sf_dir):
     )
 
 
-@_q(
-    "rollup_daily_cascade",
-    f"""
-    SELECT event_type,
-           {_SQL_DAY} AS bucket_ts,
-           count(*) AS n,
-           round(1e-9 + sum(value), 4) AS sum_value,
-           round(1e-9 + avg(value), 4) AS mean_value,
-           min(value) AS min_value,
-           max(value) AS max_value
-    FROM events GROUP BY 1, 2
-    """,
-)
-def rollup_daily_cascade(spark, sf_dir):
-    """Daily tier computed BY RE-AGGREGATING the hourly tier (the engine's
-    cascade plan — the big shuffle touches raw rows once; oracle computes
-    daily directly, proving tier consistency)."""
+# column name of the fine tier's bucket in a cascade
+_TIER_COL = {3600: "hour_ts", _DAY: "day_ts"}
+
+
+def _cascade(spark, sf_dir, fine: int, coarse) -> DataFrame:
+    """Tier at ``coarse`` computed BY RE-AGGREGATING the tier at ``fine``
+    (the engine's cascade plan — the big shuffle touches raw rows once;
+    the oracle aggregates the coarse tier directly, proving tier
+    consistency)."""
     ev = _t(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", _bucket_sec(_sec("ts"), 3600).alias("hour_ts")
-    ).agg(
+    col = _TIER_COL[fine]
+    fine_bucket = _bucket_sec(_sec("ts"), fine)
+    tier = ev.groupBy("event_type", fine_bucket.alias(col)).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("value").alias("s"),
         F.min("value").alias("mn"),
         F.max("value").alias("mx"),
     )
-    day = _bucket_sec(F.col("hour_ts"), _DAY)
-    return hourly.groupBy("event_type", day.alias("bucket_ts")).agg(
+    bucket = _bucket_sec(F.col(col), coarse)
+    return tier.groupBy("event_type", bucket.alias("bucket_ts")).agg(
         F.sum("n").alias("n"),
         F.round(F.lit(1e-9) + F.sum("s"), 4).alias("sum_value"),
         F.round(F.lit(1e-9) + F.sum("s") / F.sum("n"), 4).alias("mean_value"),
@@ -156,39 +154,17 @@ def rollup_daily_cascade(spark, sf_dir):
     )
 
 
-@_q(
-    "rollup_weekly_cascade",
-    f"""
-    SELECT event_type,
-           {_SQL_WEEK} AS bucket_ts,
-           count(*) AS n,
-           round(1e-9 + sum(value), 4) AS sum_value,
-           round(1e-9 + avg(value), 4) AS mean_value,
-           min(value) AS min_value,
-           max(value) AS max_value
-    FROM events GROUP BY 1, 2
-    """,
-)
+@_q("rollup_daily_cascade", _rollup_sql(_SQL_DAY))
+def rollup_daily_cascade(spark, sf_dir):
+    """Daily tier re-aggregated from the hourly tier."""
+    return _cascade(spark, sf_dir, 3600, _DAY)
+
+
+@_q("rollup_weekly_cascade", _rollup_sql(_SQL_WEEK))
 def rollup_weekly_cascade(spark, sf_dir):
     """Weekly tier re-aggregated from the daily tier (Monday-aligned,
     pure epoch arithmetic so it is timezone-free in both engines)."""
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", _bucket_sec(_sec("ts"), _DAY).alias("day_ts")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("value").alias("s"),
-        F.min("value").alias("mn"),
-        F.max("value").alias("mx"),
-    )
-    wk = _bucket_sec(F.col("day_ts"), "week")
-    return daily.groupBy("event_type", wk.alias("bucket_ts")).agg(
-        F.sum("n").alias("n"),
-        F.round(F.lit(1e-9) + F.sum("s"), 4).alias("sum_value"),
-        F.round(F.lit(1e-9) + F.sum("s") / F.sum("n"), 4).alias("mean_value"),
-        F.min("mn").alias("min_value"),
-        F.max("mx").alias("max_value"),
-    )
+    return _cascade(spark, sf_dir, _DAY, "week")
 
 
 @_q(
@@ -783,50 +759,61 @@ def orders_date_window(spark, sf_dir):
 
 
 # =====================================================================
-# Gap-fill (the flagship): dense hourly spine between sparse anchors,
-# value interpolated by cumulative dose-response — full SQL oracle.
-# Reference: interpolate_between_assimilated_points
-# (/root/reference/src/04_reconstruct_s2_traits.py:162-213).
+# Gap-fill (the flagship): dense hourly or daily spine between sparse
+# anchors, value interpolated by cumulative dose-response — full SQL
+# oracle. Reference: interpolate_between_assimilated_points
+# (/root/reference/src/04_reconstruct_s2_traits.py:162-213), run for
+# 3 response curves x {hourly, daily} covariates (:623-632).
 # =====================================================================
 
-# diurnal covariate (tz-free): T(h) = 15 + 8*sin(2*pi*(mod(h,24)/24 - 0.3))
-# response: asymptotic with the reference's fitted hourly params
-# (Asym=14.945, lrc=-7.393, c0=2.163)
-_GAPFILL_SQL = """
+# bucket index column of each gap-fill grain (h: hours, d: days)
+_GAP_IDX = {3600: "h", _DAY: "d"}
+
+
+def _gapfill_sql(width: int, response: tuple[str, str] | None = None) -> str:
+    """Oracle of _gapfill: ``response`` is None (time-linear) or the
+    (covariate t, curve r of t) SQL pair over the bucket index column."""
+    x = _GAP_IDX[width]
+    frac_time = f"({x} - {x}0) * 1.0 / greatest({x}1 - {x}0, 1)"
+    spine = f"""
     WITH anchors AS (
-      SELECT user_id, cast(floor(floor(epoch(ts))/3600) AS bigint) AS h,
+      SELECT user_id, cast(floor(floor(epoch(ts))/{width}) AS bigint) AS {x},
              avg(value) AS v
       FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
     ),
     seg AS (
-      SELECT user_id, h AS h0, v AS v0,
-             coalesce(lead(h) OVER w, h) AS h1,
+      SELECT user_id, {x} AS {x}0, v AS v0,
+             coalesce(lead({x}) OVER w, {x}) AS {x}1,
              coalesce(lead(v) OVER w, v) AS v1
-      FROM anchors WINDOW w AS (PARTITION BY user_id ORDER BY h)
+      FROM anchors WINDOW w AS (PARTITION BY user_id ORDER BY {x})
     ),
     spine AS (
-      SELECT user_id, h0, v0, h1, v1, unnest(generate_series(h0, h1)) AS h
+      SELECT user_id, {x}0, v0, {x}1, v1,
+             unnest(generate_series({x}0, {x}1)) AS {x}
       FROM seg
-    ),
-    resp AS (
-      SELECT *,
-             greatest(0.0, 14.945 * (1 - exp(-exp(-7.393) *
-               ((15 + 8 * sin(2 * pi() * ((h % 24) / 24.0 - 0.3))) - 2.163))))
-               AS r
-      FROM spine
-    ),
+    )"""
+    if response is None:
+        return f"""{spine}
+    SELECT DISTINCT user_id, {x} * {width} AS bucket_ts,
+           round(1e-9 + v0 + {frac_time} * (v1 - v0), 4) AS value
+    FROM spine
+"""
+    t, r = response
+    return f"""{spine},
+    tt AS (SELECT *, {t} AS t FROM spine),
+    resp AS (SELECT *, {r} AS r FROM tt),
     cum AS (
-      SELECT user_id, h0, v0, h1, v1, h, r,
-             sum(r) OVER (PARTITION BY user_id, h0 ORDER BY h
+      SELECT user_id, {x}0, v0, {x}1, v1, {x}, r,
+             sum(r) OVER (PARTITION BY user_id, {x}0 ORDER BY {x}
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c,
-             first_value(r) OVER (PARTITION BY user_id, h0 ORDER BY h) AS in_min_r,
-             sum(r) OVER (PARTITION BY user_id, h0) AS in_max
+             first_value(r) OVER (PARTITION BY user_id, {x}0 ORDER BY {x}) AS in_min_r,
+             sum(r) OVER (PARTITION BY user_id, {x}0) AS in_max
       FROM resp
     )
-    SELECT DISTINCT user_id, h * 3600 AS bucket_ts,
+    SELECT DISTINCT user_id, {x} * {width} AS bucket_ts,
            round(1e-9 + CASE WHEN in_max - in_min_r > 0
                  THEN v0 + (c - in_min_r) / (in_max - in_min_r) * (v1 - v0)
-                 ELSE v0 + (h - h0) * 1.0 / greatest(h1 - h0, 1) * (v1 - v0)
+                 ELSE v0 + {frac_time} * (v1 - v0)
                  END, 4) AS value
     FROM cum
 """
@@ -834,134 +821,107 @@ _GAPFILL_SQL = """
 # first_value(r) == cum at the first row, identical by construction.
 
 
-@_q("gapfill_dose_response", _GAPFILL_SQL)
+def _gapfill(
+    spark,
+    sf_dir,
+    width: int,
+    response: Callable[[F.Column], F.Column] | None = None,
+) -> DataFrame:
+    """Gap-fill of the per-bucket mean 'purchase' value of every user at
+    bucket ``width`` seconds: each pair of consecutive anchors spans a
+    dense spine; the value moves from v0 to v1 by the cumulative
+    ``response`` (a Column function of the bucket index) over the
+    segment, or time-linearly where the response is flat or None. All
+    built-in expressions (sequence/explode/window cumsum): whole-stage
+    codegen, no Python."""
+    x = _GAP_IDX[width]
+    x0, x1 = f"{x}0", f"{x}1"
+    ev = _t(spark, sf_dir, "events")
+    anchors = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", F.floor(_sec("ts") / width).cast("long").alias(x))
+        .agg(F.avg("value").alias("v"))
+    )
+    w = Window.partitionBy("user_id").orderBy(x)
+    seg = anchors.select(
+        "user_id",
+        F.col(x).alias(x0),
+        F.col("v").alias("v0"),
+        F.coalesce(F.lead(x).over(w), F.col(x)).alias(x1),
+        F.coalesce(F.lead("v").over(w), F.col("v")).alias("v1"),
+    )
+    spine = seg.select("*", F.explode(F.sequence(x0, x1)).alias(x))
+    frac_time = (F.col(x) - F.col(x0)) / F.greatest(
+        F.col(x1) - F.col(x0), F.lit(1)
+    )
+    dv = F.col("v1") - F.col("v0")
+    if response is None:
+        out, val = spine, F.lit(1e-9) + F.col("v0") + frac_time * dv
+    else:
+        resp = spine.withColumn("r", response(F.col(x)))
+        wc = (
+            Window.partitionBy("user_id", x0)
+            .orderBy(x)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        wall = Window.partitionBy("user_id", x0)
+        wf = Window.partitionBy("user_id", x0).orderBy(x)
+        out = resp.select(
+            "user_id", x0, "v0", x1, "v1", x,
+            F.sum("r").over(wc).alias("c"),
+            F.first("r").over(wf).alias("in_min_r"),
+            F.sum("r").over(wall).alias("in_max"),
+        )
+        rng = F.col("in_max") - F.col("in_min_r")
+        frac_resp = (F.col("c") - F.col("in_min_r")) / rng
+        val = F.lit(1e-9) + (
+            F.col("v0") + F.when(rng > 0, frac_resp).otherwise(frac_time) * dv
+        )
+    return out.select(
+        "user_id",
+        (F.col(x) * width).alias("bucket_ts"),
+        F.round(val, 4).alias("value"),
+    ).distinct()
+
+
+# diurnal covariate (tz-free): T(h) = 15 + 8*sin(2*pi*(mod(h,24)/24 - 0.3))
+# response: asymptotic with the reference's fitted hourly params
+# (Asym=14.945, lrc=-7.393, c0=2.163)
+@_q(
+    "gapfill_dose_response",
+    _gapfill_sql(
+        3600,
+        (
+            "(15 + 8 * sin(2 * pi() * ((h % 24) / 24.0 - 0.3)))",
+            "greatest(0.0, 14.945 * (1 - exp(-exp(-7.393) * (t - 2.163))))",
+        ),
+    ),
+)
 def gapfill_dose_response(spark, sf_dir):
     """Dense reconstruction between sparse anchors where the interpolation
     fraction is the cumulative dose-response of a diurnal covariate —
-    the engine's core semantics with a complete SQL oracle. All built-in
-    expressions (sequence/explode/window cumsum): whole-stage codegen,
-    no Python."""
-    ev = _t(spark, sf_dir, "events")
-    anchors = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            "user_id", F.floor(_sec("ts") / 3600).cast("long").alias("h")
+    the engine's core semantics with a complete SQL oracle."""
+
+    def r(h):
+        t = 15 + 8 * F.sin(2 * 3.141592653589793 * ((h % 24) / 24.0 - 0.3))
+        return F.greatest(
+            F.lit(0.0),
+            14.945 * (1 - F.exp(-F.exp(F.lit(-7.393)) * (t - 2.163))),
         )
-        .agg(F.avg("value").alias("v"))
-    )
-    w = Window.partitionBy("user_id").orderBy("h")
-    seg = anchors.select(
-        "user_id",
-        F.col("h").alias("h0"),
-        F.col("v").alias("v0"),
-        F.coalesce(F.lead("h").over(w), F.col("h")).alias("h1"),
-        F.coalesce(F.lead("v").over(w), F.col("v")).alias("v1"),
-    )
-    spine = seg.select(
-        "*", F.explode(F.sequence("h0", "h1")).alias("h")
-    )
-    t = 15 + 8 * F.sin(
-        2 * 3.141592653589793 * ((F.col("h") % 24) / 24.0 - 0.3)
-    )
-    r = F.greatest(
-        F.lit(0.0),
-        14.945 * (1 - F.exp(-F.exp(F.lit(-7.393)) * (t - 2.163))),
-    )
-    resp = spine.withColumn("r", r)
-    wc = (
-        Window.partitionBy("user_id", "h0")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("user_id", "h0")
-    wf = Window.partitionBy("user_id", "h0").orderBy("h")
-    cum = resp.select(
-        "user_id", "h0", "v0", "h1", "v1", "h",
-        F.sum("r").over(wc).alias("c"),
-        F.first("r").over(wf).alias("in_min_r"),
-        F.sum("r").over(wall).alias("in_max"),
-    )
-    rng = F.col("in_max") - F.col("in_min_r")
-    frac_resp = (F.col("c") - F.col("in_min_r")) / rng
-    frac_time = (F.col("h") - F.col("h0")) / F.greatest(
-        F.col("h1") - F.col("h0"), F.lit(1)
-    )
-    val = F.col("v0") + F.when(rng > 0, frac_resp).otherwise(frac_time) * (
-        F.col("v1") - F.col("v0")
-    )
-    return cum.select(
-        "user_id",
-        (F.col("h") * 3600).alias("bucket_ts"),
-        F.round(F.lit(1e-9) + val, 4).alias("value"),
-    ).distinct()
+
+    return _gapfill(spark, sf_dir, 3600, r)
 
 
-@_q(
-    "gapfill_linear",
-    """
-    WITH anchors AS (
-      SELECT user_id, cast(floor(floor(epoch(ts))/3600) AS bigint) AS h,
-             avg(value) AS v
-      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-    ),
-    seg AS (
-      SELECT user_id, h AS h0, v AS v0,
-             coalesce(lead(h) OVER w, h) AS h1,
-             coalesce(lead(v) OVER w, v) AS v1
-      FROM anchors WINDOW w AS (PARTITION BY user_id ORDER BY h)
-    ),
-    spine AS (
-      SELECT user_id, h0, v0, h1, v1, unnest(generate_series(h0, h1)) AS h
-      FROM seg
-    )
-    SELECT DISTINCT user_id, h * 3600 AS bucket_ts,
-           round(1e-9 + v0 + (h - h0) * 1.0 / greatest(h1 - h0, 1) * (v1 - v0), 4) AS value
-    FROM spine
-    """,
-)
+@_q("gapfill_linear", _gapfill_sql(3600))
 def gapfill_linear(spark, sf_dir):
     """Time-linear gap-fill (the reference's fallback when the response is
     flat over a segment)."""
-    ev = _t(spark, sf_dir, "events")
-    anchors = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            "user_id", F.floor(_sec("ts") / 3600).cast("long").alias("h")
-        )
-        .agg(F.avg("value").alias("v"))
-    )
-    w = Window.partitionBy("user_id").orderBy("h")
-    seg = anchors.select(
-        "user_id",
-        F.col("h").alias("h0"),
-        F.col("v").alias("v0"),
-        F.coalesce(F.lead("h").over(w), F.col("h")).alias("h1"),
-        F.coalesce(F.lead("v").over(w), F.col("v")).alias("v1"),
-    )
-    spine = seg.select("*", F.explode(F.sequence("h0", "h1")).alias("h"))
-    frac = (F.col("h") - F.col("h0")) / F.greatest(
-        F.col("h1") - F.col("h0"), F.lit(1)
-    )
-    return spine.select(
-        "user_id",
-        (F.col("h") * 3600).alias("bucket_ts"),
-        F.round(F.lit(1e-9) + F.col("v0") + frac * (F.col("v1") - F.col("v0")), 4).alias("value"),
-    ).distinct()
+    return _gapfill(spark, sf_dir, 3600)
 
 
-# =====================================================================
-# Curve x granularity cross product (reference runs 3 response curves x
-# {hourly, daily} covariates — 04_reconstruct_s2_traits.py:623-632).
 # gapfill_wang_engels pins the trickiest boundary semantics (outside
 # [xmin,xmax] -> 0, SURVEY §2.10); the daily variant pins the
 # resample('D').mean() covariate downsample (:396-397) feeding the fill.
-# =====================================================================
-
-import math  # noqa: E402
-
-from sentinel2_crop_trait_timeseries_spark.functions.response import (  # noqa: E402
-    PARAMS_BY_GRANULARITY,
-)
 
 # full seasonal+diurnal covariate (temperature_np), on an integer-hour
 # column named {h}: both engines use C-style % (sign of dividend), and
@@ -974,8 +934,7 @@ _T_OF_H_SQL = (
 _TWO_PI = 2.0 * math.pi
 
 
-def _t_of_h_col(h) -> F.Column:
-    hh = h if not isinstance(h, str) else F.col(h)
+def _t_of_h_col(hh: F.Column) -> F.Column:
     return (
         F.lit(10.0)
         + 12.0 * F.sin(F.lit(_TWO_PI) * (((hh - 455832) % 8760) / 8760.0 - 0.25))
@@ -987,51 +946,20 @@ _WE = PARAMS_BY_GRANULARITY["hourly"]["wang_engels"]
 _WE_DEN = _WE["xopt"] - _WE["xmin"]
 _WE_ALPHA = math.log(2.0) / math.log((_WE["xmax"] - _WE["xmin"]) / _WE_DEN)
 
-_GAPFILL_WE_SQL = f"""
-    WITH anchors AS (
-      SELECT user_id, cast(floor(floor(epoch(ts))/3600) AS bigint) AS h,
-             avg(value) AS v
-      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-    ),
-    seg AS (
-      SELECT user_id, h AS h0, v AS v0,
-             coalesce(lead(h) OVER w, h) AS h1,
-             coalesce(lead(v) OVER w, v) AS v1
-      FROM anchors WINDOW w AS (PARTITION BY user_id ORDER BY h)
-    ),
-    spine AS (
-      SELECT user_id, h0, v0, h1, v1, unnest(generate_series(h0, h1)) AS h
-      FROM seg
-    ),
-    tt AS (
-      SELECT *, {_T_OF_H_SQL.format(h='h')} AS t FROM spine
-    ),
-    resp AS (
-      SELECT user_id, h0, v0, h1, v1, h,
-             CASE WHEN t >= {_WE['xmin']!r} AND t <= {_WE['xmax']!r}
+
+@_q(
+    "gapfill_wang_engels",
+    _gapfill_sql(
+        3600,
+        (
+            _T_OF_H_SQL.format(h="h"),
+            f"""CASE WHEN t >= {_WE['xmin']!r} AND t <= {_WE['xmax']!r}
                   THEN pow((t - {_WE['xmin']!r}) / {_WE_DEN!r}, {_WE_ALPHA!r})
                        * (2 - pow((t - {_WE['xmin']!r}) / {_WE_DEN!r}, {_WE_ALPHA!r}))
-                  ELSE 0.0 END AS r
-      FROM tt
+                  ELSE 0.0 END""",
+        ),
     ),
-    cum AS (
-      SELECT user_id, h0, v0, h1, v1, h, r,
-             sum(r) OVER (PARTITION BY user_id, h0 ORDER BY h
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c,
-             first_value(r) OVER (PARTITION BY user_id, h0 ORDER BY h) AS in_min_r,
-             sum(r) OVER (PARTITION BY user_id, h0) AS in_max
-      FROM resp
-    )
-    SELECT DISTINCT user_id, h * 3600 AS bucket_ts,
-           round(1e-9 + CASE WHEN in_max - in_min_r > 0
-                 THEN v0 + (c - in_min_r) / (in_max - in_min_r) * (v1 - v0)
-                 ELSE v0 + (h - h0) * 1.0 / greatest(h1 - h0, 1) * (v1 - v0)
-                 END, 4) AS value
-    FROM cum
-"""
-
-
-@_q("gapfill_wang_engels", _GAPFILL_WE_SQL)
+)
 def gapfill_wang_engels(spark, sf_dir):
     """Dose-response gap-fill with the Wang-Engels curve at the
     reference's HOURLY fitted parameters (xmax - xopt = 0.13 C, so the
@@ -1041,104 +969,32 @@ def gapfill_wang_engels(spark, sf_dir):
     overflow-free form t^a*(2-t^a) — the reference's own formula
     overflows float64 at these parameters (see functions/response.py).
     """
-    ev = _t(spark, sf_dir, "events")
-    anchors = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            "user_id", F.floor(_sec("ts") / 3600).cast("long").alias("h")
-        )
-        .agg(F.avg("value").alias("v"))
-    )
-    w = Window.partitionBy("user_id").orderBy("h")
-    seg = anchors.select(
-        "user_id",
-        F.col("h").alias("h0"),
-        F.col("v").alias("v0"),
-        F.coalesce(F.lead("h").over(w), F.col("h")).alias("h1"),
-        F.coalesce(F.lead("v").over(w), F.col("v")).alias("v1"),
-    )
-    spine = seg.select("*", F.explode(F.sequence("h0", "h1")).alias("h"))
-    t = _t_of_h_col("h")
-    ta = F.pow((t - _WE["xmin"]) / F.lit(_WE_DEN), F.lit(_WE_ALPHA))
-    r = F.when(
-        (t >= _WE["xmin"]) & (t <= _WE["xmax"]), ta * (F.lit(2.0) - ta)
-    ).otherwise(F.lit(0.0))
-    resp = spine.withColumn("r", r)
-    wc = (
-        Window.partitionBy("user_id", "h0")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("user_id", "h0")
-    wf = Window.partitionBy("user_id", "h0").orderBy("h")
-    cum = resp.select(
-        "user_id", "h0", "v0", "h1", "v1", "h",
-        F.sum("r").over(wc).alias("c"),
-        F.first("r").over(wf).alias("in_min_r"),
-        F.sum("r").over(wall).alias("in_max"),
-    )
-    rng = F.col("in_max") - F.col("in_min_r")
-    frac_resp = (F.col("c") - F.col("in_min_r")) / rng
-    frac_time = (F.col("h") - F.col("h0")) / F.greatest(
-        F.col("h1") - F.col("h0"), F.lit(1)
-    )
-    val = F.col("v0") + F.when(rng > 0, frac_resp).otherwise(frac_time) * (
-        F.col("v1") - F.col("v0")
-    )
-    return cum.select(
-        "user_id",
-        (F.col("h") * 3600).alias("bucket_ts"),
-        F.round(F.lit(1e-9) + val, 4).alias("value"),
-    ).distinct()
+
+    def r(h):
+        t = _t_of_h_col(h)
+        ta = F.pow((t - _WE["xmin"]) / F.lit(_WE_DEN), F.lit(_WE_ALPHA))
+        return F.when(
+            (t >= _WE["xmin"]) & (t <= _WE["xmax"]), ta * (F.lit(2.0) - ta)
+        ).otherwise(F.lit(0.0))
+
+    return _gapfill(spark, sf_dir, 3600, r)
 
 
 _AS_D = PARAMS_BY_GRANULARITY["daily"]["asymptotic"]
 
-_GAPFILL_DAILY_SQL = f"""
-    WITH anchors AS (
-      SELECT user_id, cast(floor(floor(epoch(ts))/86400) AS bigint) AS d,
-             avg(value) AS v
-      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-    ),
-    seg AS (
-      SELECT user_id, d AS d0, v AS v0,
-             coalesce(lead(d) OVER w, d) AS d1,
-             coalesce(lead(v) OVER w, v) AS v1
-      FROM anchors WINDOW w AS (PARTITION BY user_id ORDER BY d)
-    ),
-    spine AS (
-      SELECT user_id, d0, v0, d1, v1, unnest(generate_series(d0, d1)) AS d
-      FROM seg
-    ),
-    tt AS (
-      SELECT *, list_aggregate(list_transform(generate_series(0, 23),
-                  k -> {_T_OF_H_SQL.format(h='(d*24 + k)')}), 'sum') / 24.0 AS t
-      FROM spine
-    ),
-    resp AS (
-      SELECT user_id, d0, v0, d1, v1, d,
-             greatest(0.0, {_AS_D['Asym']!r} * (1 - exp(-exp({_AS_D['lrc']!r})
-               * (t - {_AS_D['c0']!r})))) AS r
-      FROM tt
-    ),
-    cum AS (
-      SELECT user_id, d0, v0, d1, v1, d, r,
-             sum(r) OVER (PARTITION BY user_id, d0 ORDER BY d
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c,
-             first_value(r) OVER (PARTITION BY user_id, d0 ORDER BY d) AS in_min_r,
-             sum(r) OVER (PARTITION BY user_id, d0) AS in_max
-      FROM resp
-    )
-    SELECT DISTINCT user_id, d * 86400 AS bucket_ts,
-           round(1e-9 + CASE WHEN in_max - in_min_r > 0
-                 THEN v0 + (c - in_min_r) / (in_max - in_min_r) * (v1 - v0)
-                 ELSE v0 + (d - d0) * 1.0 / greatest(d1 - d0, 1) * (v1 - v0)
-                 END, 4) AS value
-    FROM cum
-"""
 
-
-@_q("gapfill_asymptotic_daily", _GAPFILL_DAILY_SQL)
+@_q(
+    "gapfill_asymptotic_daily",
+    _gapfill_sql(
+        _DAY,
+        (
+            f"""list_aggregate(list_transform(generate_series(0, 23),
+                  k -> {_T_OF_H_SQL.format(h='(d*24 + k)')}), 'sum') / 24.0""",
+            f"""greatest(0.0, {_AS_D['Asym']!r} * (1 - exp(-exp({_AS_D['lrc']!r})
+               * (t - {_AS_D['c0']!r}))))""",
+        ),
+    ),
+)
 def gapfill_asymptotic_daily(spark, sf_dir):
     """Daily-granularity gap-fill: the covariate is downsampled to the
     DAILY MEAN before the response (the reference's
@@ -1146,63 +1002,23 @@ def gapfill_asymptotic_daily(spark, sf_dir):
     with the reference's daily asymptotic fit. The 24-hour mean is a
     JVM-side higher-order fold (aggregate over sequence(0,23)) — no
     explode, no Python; both engines fold k ascending."""
-    ev = _t(spark, sf_dir, "events")
-    anchors = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            "user_id", F.floor(_sec("ts") / 86400).cast("long").alias("d")
+
+    def r(d):
+        t_day = (
+            F.aggregate(
+                F.sequence(F.lit(0), F.lit(23)),
+                F.lit(0.0),
+                lambda acc, k: acc + _t_of_h_col(d * 24 + k),
+            )
+            / 24.0
         )
-        .agg(F.avg("value").alias("v"))
-    )
-    w = Window.partitionBy("user_id").orderBy("d")
-    seg = anchors.select(
-        "user_id",
-        F.col("d").alias("d0"),
-        F.col("v").alias("v0"),
-        F.coalesce(F.lead("d").over(w), F.col("d")).alias("d1"),
-        F.coalesce(F.lead("v").over(w), F.col("v")).alias("v1"),
-    )
-    spine = seg.select("*", F.explode(F.sequence("d0", "d1")).alias("d"))
-    t_day = (
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(23)),
+        return F.greatest(
             F.lit(0.0),
-            lambda acc, k: acc + _t_of_h_col(F.col("d") * 24 + k),
+            _AS_D["Asym"]
+            * (F.lit(1.0) - F.exp(-math.exp(_AS_D["lrc"]) * (t_day - _AS_D["c0"]))),
         )
-        / 24.0
-    )
-    r = F.greatest(
-        F.lit(0.0),
-        _AS_D["Asym"]
-        * (F.lit(1.0) - F.exp(-math.exp(_AS_D["lrc"]) * (t_day - _AS_D["c0"]))),
-    )
-    resp = spine.withColumn("r", r)
-    wc = (
-        Window.partitionBy("user_id", "d0")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("user_id", "d0")
-    wf = Window.partitionBy("user_id", "d0").orderBy("d")
-    cum = resp.select(
-        "user_id", "d0", "v0", "d1", "v1", "d",
-        F.sum("r").over(wc).alias("c"),
-        F.first("r").over(wf).alias("in_min_r"),
-        F.sum("r").over(wall).alias("in_max"),
-    )
-    rng = F.col("in_max") - F.col("in_min_r")
-    frac_resp = (F.col("c") - F.col("in_min_r")) / rng
-    frac_time = (F.col("d") - F.col("d0")) / F.greatest(
-        F.col("d1") - F.col("d0"), F.lit(1)
-    )
-    val = F.col("v0") + F.when(rng > 0, frac_resp).otherwise(frac_time) * (
-        F.col("v1") - F.col("v0")
-    )
-    return cum.select(
-        "user_id",
-        (F.col("d") * 86400).alias("bucket_ts"),
-        F.round(F.lit(1e-9) + val, 4).alias("value"),
-    ).distinct()
+
+    return _gapfill(spark, sf_dir, _DAY, r)
 
 
 # =====================================================================

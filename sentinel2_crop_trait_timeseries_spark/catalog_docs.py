@@ -28,6 +28,8 @@ Cross-engine determinism rules (beyond catalog.py's):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -825,6 +827,8 @@ def _simhash_pairs(d: DataFrame, bucket_cap: int | None = None) -> DataFrame:
 # Embedding similarity (near-dup + ANN search)
 # =====================================================================
 
+_DEDUP_BLOCKS = 8  # hash blocks B of dedup_embedding_cosine's triangle
+
 
 @_q(
     "dedup_embedding_cosine",
@@ -840,7 +844,7 @@ def _simhash_pairs(d: DataFrame, bucket_cap: int | None = None) -> DataFrame:
     ) WHERE rn <= 20
     """,
 )
-def dedup_embedding_cosine(spark, sf_dir, n_blocks: int = 8):
+def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-dup: top-20 most-similar pairs by exact
     cosine over ALL pairs.
 
@@ -862,7 +866,7 @@ def dedup_embedding_cosine(spark, sf_dir, n_blocks: int = 8):
     import pandas as pd
 
     e = _t(spark, sf_dir, "embeddings")
-    B = n_blocks
+    B = _DEDUP_BLOCKS
     base = e.select(
         "vec_id", "embedding", F.pmod(F.hash("vec_id"), F.lit(B)).alias("blk")
     )
@@ -1882,6 +1886,52 @@ def ann_ivfpq(spark, sf_dir):
 
 from sentinel2_crop_trait_timeseries_spark.catalog import QUERIES as _REGISTRY
 
+
+def _recall_sql(truth: str, methods: dict[str, str]) -> str:
+    """UNION ALL of one recall row per method (name -> result CTE)
+    against the ground-truth CTE ``truth``."""
+    return "    UNION ALL".join(
+        f"""
+    SELECT '{method}' AS method, count(*) AS n_true,
+           cast(sum(CASE WHEN {cte}.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS bigint) AS n_hit,
+           round(1e-9 + sum(CASE WHEN {cte}.neighbor_id IS NOT NULL
+                                 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS recall
+    FROM {truth} LEFT JOIN {cte}
+      ON {truth}.query_id = {cte}.query_id
+     AND {truth}.neighbor_id = {cte}.neighbor_id
+"""
+        for method, cte in methods.items()
+    )
+
+
+def _recall_panel(bf: DataFrame, methods: dict[str, DataFrame]) -> DataFrame:
+    """Recall of each method's (query_id, neighbor_id) result against
+    the ground truth ``bf``: one row per method, in dict order."""
+
+    def recall_row(method: str, res: DataFrame) -> DataFrame:
+        idx = res.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+        hit = F.coalesce(F.col("hit"), F.lit(0))
+        return bf.join(idx, ["query_id", "neighbor_id"], "left").agg(
+            F.lit(method).alias("method"),
+            F.count(F.lit(1)).alias("n_true"),
+            F.sum(hit).cast("long").alias("n_hit"),
+            F.round(
+                F.lit(1e-9) + F.sum(hit.cast("double")) / F.count(F.lit(1)), 4
+            ).alias("recall"),
+        )
+
+    return reduce(
+        DataFrame.unionByName,
+        [recall_row(method, res) for method, res in methods.items()],
+    )
+
+
+_ANN_RECALL_METHODS = {
+    "multiprobe": "mp", "ivf": "ivf", "ivf_trained": "ivt", "pq": "pq",
+    "ivfpq": "ipq",
+}
+
 _ANN_RECALL_SQL = f"""
     WITH bf AS ({_REGISTRY["ann_topk_bruteforce"]["sql"]}),
          mp AS ({_REGISTRY["ann_multiprobe"]["sql"]}),
@@ -1889,45 +1939,7 @@ _ANN_RECALL_SQL = f"""
          ivt AS ({_REGISTRY["ann_ivf_trained"]["sql"]}),
          pq AS ({_REGISTRY["ann_pq"]["sql"]}),
          ipq AS ({_REGISTRY["ann_ivfpq"]["sql"]})
-    SELECT 'multiprobe' AS method, count(*) AS n_true,
-           cast(sum(CASE WHEN mp.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS bigint) AS n_hit,
-           round(1e-9 + sum(CASE WHEN mp.neighbor_id IS NOT NULL
-                                 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS recall
-    FROM bf LEFT JOIN mp
-      ON bf.query_id = mp.query_id AND bf.neighbor_id = mp.neighbor_id
-    UNION ALL
-    SELECT 'ivf' AS method, count(*) AS n_true,
-           cast(sum(CASE WHEN ivf.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS bigint) AS n_hit,
-           round(1e-9 + sum(CASE WHEN ivf.neighbor_id IS NOT NULL
-                                 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS recall
-    FROM bf LEFT JOIN ivf
-      ON bf.query_id = ivf.query_id AND bf.neighbor_id = ivf.neighbor_id
-    UNION ALL
-    SELECT 'ivf_trained' AS method, count(*) AS n_true,
-           cast(sum(CASE WHEN ivt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS bigint) AS n_hit,
-           round(1e-9 + sum(CASE WHEN ivt.neighbor_id IS NOT NULL
-                                 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS recall
-    FROM bf LEFT JOIN ivt
-      ON bf.query_id = ivt.query_id AND bf.neighbor_id = ivt.neighbor_id
-    UNION ALL
-    SELECT 'pq' AS method, count(*) AS n_true,
-           cast(sum(CASE WHEN pq.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS bigint) AS n_hit,
-           round(1e-9 + sum(CASE WHEN pq.neighbor_id IS NOT NULL
-                                 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS recall
-    FROM bf LEFT JOIN pq
-      ON bf.query_id = pq.query_id AND bf.neighbor_id = pq.neighbor_id
-    UNION ALL
-    SELECT 'ivfpq' AS method, count(*) AS n_true,
-           cast(sum(CASE WHEN ipq.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS bigint) AS n_hit,
-           round(1e-9 + sum(CASE WHEN ipq.neighbor_id IS NOT NULL
-                                 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS recall
-    FROM bf LEFT JOIN ipq
-      ON bf.query_id = ipq.query_id AND bf.neighbor_id = ipq.neighbor_id
+    {_recall_sql("bf", _ANN_RECALL_METHODS)}
 """
 
 
@@ -1947,37 +1959,19 @@ def ann_recall(spark, sf_dir):
     p ~ 0.86) the same 9-probe config predicts recall ~ 0.68, and
     widening to Hamming<=2 (37 probes, still 14% of buckets) ~ 0.91 —
     the knob this query exists to tune."""
-    # bf feeds all five measure() branches uncheckpointed on purpose:
+    # bf feeds all five method branches uncheckpointed on purpose:
     # AQE's runtime stage reuse dedupes the shared brute-force stages
     # across the branches (see ann_recall_clustered's note; an eager
     # checkpoint measured slower by serializing the heaviest leg).
     bf = _REGISTRY["ann_topk_bruteforce"]["fn"](spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-
-    def measure(method: str) -> DataFrame:
-        idx = _REGISTRY[f"ann_{method}"]["fn"](spark, sf_dir).select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
-        j = bf.join(idx, ["query_id", "neighbor_id"], "left")
-        return j.agg(
-            F.lit(method).alias("method"),
-            F.count(F.lit(1)).alias("n_true"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("n_hit"),
-            F.round(
-                F.lit(1e-9)
-                + F.sum(F.coalesce(F.col("hit"), F.lit(0)).cast("double"))
-                / F.count(F.lit(1)),
-                4,
-            ).alias("recall"),
-        )
-
-    return (
-        measure("multiprobe")
-        .unionByName(measure("ivf"))
-        .unionByName(measure("ivf_trained"))
-        .unionByName(measure("pq"))
-        .unionByName(measure("ivfpq"))
+    return _recall_panel(
+        bf,
+        {
+            m: _REGISTRY[f"ann_{m}"]["fn"](spark, sf_dir)
+            for m in _ANN_RECALL_METHODS
+        },
     )
 
 
@@ -2007,18 +2001,6 @@ _COS4 = (
     "(sqrt(list_inner_product({a}, {a})) * "
     "sqrt(list_inner_product({b}, {b})))), 4)"
 )
-
-
-def _recall_row_sql(method: str, cte: str) -> str:
-    return f"""
-    SELECT '{method}' AS method, count(*) AS n_true,
-           cast(sum(CASE WHEN {cte}.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS bigint) AS n_hit,
-           round(1e-9 + sum(CASE WHEN {cte}.neighbor_id IS NOT NULL
-                                 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS recall
-    FROM bfc LEFT JOIN {cte}
-      ON bfc.query_id = {cte}.query_id AND bfc.neighbor_id = {cte}.neighbor_id
-    """
 
 
 def _topk_sql(probes_cte: str, corpus_cte: str, join_key: str) -> str:
@@ -2130,22 +2112,18 @@ _ANN_RECALL_CLUSTERED_SQL = f"""
     l4_probes AS (SELECT vec_id AS query_id, embedding AS qe, cell
                   FROM l4 WHERE vec_id % 50 = 0),
     lsh4 AS ({_topk_sql("l4_probes", "l4_corpus", "cell")})
-    {_recall_row_sql("multiprobe", "mpc")}
-    UNION ALL
-    {_recall_row_sql("ivf_p2", "iv2")}
-    UNION ALL
-    {_recall_row_sql("ivf_p1", "iv1")}
-    UNION ALL
-    {_recall_row_sql("lsh4", "lsh4")}
+    {_recall_sql(
+        "bfc",
+        {"multiprobe": "mpc", "ivf_p2": "iv2", "ivf_p1": "iv1", "lsh4": "lsh4"},
+    )}
 """
 
 
-def _clustered_emb(spark, sf_dir) -> DataFrame:
-    """Deterministic label-clustered corpus derived from the fixture:
-    w = snap(4*cv + (v - cv)/4), all values exact 1/512 multiples.
-    localCheckpoint-ed: four index builds + the ground truth read the
-    derived vectors without re-deriving the centroid join per branch
-    (at cluster scale this is a materialized sample table)."""
+def _with_label_centroid(spark, sf_dir) -> DataFrame:
+    """(label, vec_id, emb, cent): every embedding snapped to the 1/512
+    grid next to its label's snapped centroid. Centroids are a
+    K_labels x dim map-side-combinable posexplode aggregate, collected
+    to arrays and BROADCAST, so the corpus joins them unshuffled."""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -2164,8 +2142,17 @@ def _clustered_emb(spark, sf_dir) -> DataFrame:
             lambda s: s.getField("cv"),
         ).alias("cent")
     )
+    return emb.join(F.broadcast(cent), "label")
+
+
+def _clustered_emb(spark, sf_dir) -> DataFrame:
+    """Deterministic label-clustered corpus derived from the fixture:
+    w = snap(4*cv + (v - cv)/4), all values exact 1/512 multiples.
+    localCheckpoint-ed: four index builds + the ground truth read the
+    derived vectors without re-deriving the centroid join per branch
+    (at cluster scale this is a materialized sample table)."""
     return (
-        emb.join(F.broadcast(cent), "label")
+        _with_label_centroid(spark, sf_dir)
         .select(
             "vec_id",
             F.zip_with(
@@ -2202,7 +2189,7 @@ def ann_recall_clustered(spark, sf_dir):
 
     ce = _clustered_emb(spark, sf_dir)
     probes = ce.filter(F.col("vec_id") % 50 == 0)
-    # bf feeds all four measure() branches UNCHECKPOINTED on purpose:
+    # bf feeds all four method branches UNCHECKPOINTED on purpose:
     # AQE's runtime stage reuse dedupes the shared brute-force stages
     # across the branches, and an eager checkpoint here was measured
     # SLOWER at 1x and 10x scale (it serializes the heaviest leg into
@@ -2230,37 +2217,16 @@ def ann_recall_clustered(spark, sf_dir):
     # vectorized exact-on-grid scoring instead of fold expressions
     lsh4 = grouped_cell_topk(l4c, l4q, 3)
 
-    methods = {
-        "multiprobe": sign_projection_topk(
-            ce, probes, _ANN_PLANES, k=3, radius=1
-        ),
-        "ivf_p2": ivf_topk(ce, probes, _IVF_CENTROIDS, k=3, nprobe=2),
-        "ivf_p1": ivf_topk(ce, probes, _IVF_CENTROIDS, k=3, nprobe=1),
-        "lsh4": lsh4,
-    }
-
-    def measure(method: str) -> DataFrame:
-        idx = methods[method].select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
-        j = bf.join(idx, ["query_id", "neighbor_id"], "left")
-        return j.agg(
-            F.lit(method).alias("method"),
-            F.count(F.lit(1)).alias("n_true"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("n_hit"),
-            F.round(
-                F.lit(1e-9)
-                + F.sum(F.coalesce(F.col("hit"), F.lit(0)).cast("double"))
-                / F.count(F.lit(1)),
-                4,
-            ).alias("recall"),
-        )
-
-    return (
-        measure("multiprobe")
-        .unionByName(measure("ivf_p2"))
-        .unionByName(measure("ivf_p1"))
-        .unionByName(measure("lsh4"))
+    return _recall_panel(
+        bf,
+        {
+            "multiprobe": sign_projection_topk(
+                ce, probes, _ANN_PLANES, k=3, radius=1
+            ),
+            "ivf_p2": ivf_topk(ce, probes, _IVF_CENTROIDS, k=3, nprobe=2),
+            "ivf_p1": ivf_topk(ce, probes, _IVF_CENTROIDS, k=3, nprobe=1),
+            "lsh4": lsh4,
+        },
     )
 
 
@@ -3528,32 +3494,14 @@ def embedding_outlier_zscore(spark, sf_dir):
     read the materialized distances instead of re-deriving the
     corpus-join subtree per DataFrame branch (plan-asserted:
     exactly one BroadcastHashJoin)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform(
-            F.col("embedding"), lambda x: _snap(x.cast("double"))
-        ).alias("emb"),
-    )
-    cent_rows = (
-        emb.select("label", F.posexplode("emb").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(_snap(F.sum("v") / F.count("*")).alias("cv"))
-    )
-    cent = cent_rows.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-            lambda s: s.getField("cv"),
-        ).alias("cent")
-    )
+    ec = _with_label_centroid(spark, sf_dir)
     d = F.aggregate(
         F.zip_with("emb", "cent", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, t: acc + t,
     )
     dist = (
-        emb.join(F.broadcast(cent), "label")
-        .select(
+        ec.select(
             "vec_id",
             "label",
             d.alias("d"),

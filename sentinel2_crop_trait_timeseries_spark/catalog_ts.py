@@ -1908,29 +1908,60 @@ _SQL_DAILY = f"""
 """
 
 
+_SQL_SUFFICIENT = """count(*) AS n, sum(a.s) AS sx, sum(b.s) AS sy,
+             sum(a.s * b.s) AS sxy, sum(a.s * a.s) AS sx2,
+             sum(b.s * b.s) AS sy2"""
+
+_SQL_PEARSON = """round(1e-9 +
+             (cast(n AS double) * sxy - cast(sx AS double) * sy)
+             / (sqrt(cast(n AS double) * sx2 - cast(sx AS double) * sx)
+                * sqrt(cast(n AS double) * sy2 - cast(sy AS double) * sy)),
+             4)"""
+
+_SQL_BOTH_VARY = """cast(n AS double) * sx2 - cast(sx AS double) * sx > 0
+      AND cast(n AS double) * sy2 - cast(sy AS double) * sy > 0"""
+
+
+def _pearson(grouped) -> tuple[DataFrame, F.Column]:
+    """The six sufficient statistics (n, sx, sy, sxy, sx2, sy2) of the
+    grouped (xs, ys) pairs as EXACT BIGINT sums, kept where both series
+    vary, and the rounded Pearson r over them — one double expression
+    tree, so every op is correctly-rounded IEEE on identical operands
+    in both engines."""
+    p = grouped.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("xs").alias("sx"),
+        F.sum("ys").alias("sy"),
+        F.sum(F.col("xs") * F.col("ys")).alias("sxy"),
+        F.sum(F.col("xs") * F.col("xs")).alias("sx2"),
+        F.sum(F.col("ys") * F.col("ys")).alias("sy2"),
+    )
+    nd = F.col("n").cast("double")
+    vx = nd * F.col("sx2") - F.col("sx").cast("double") * F.col("sx")
+    vy = nd * F.col("sy2") - F.col("sy").cast("double") * F.col("sy")
+    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
+    return (
+        p.filter((vx > 0) & (vy > 0)),
+        F.round(F.lit(1e-9) + num / (F.sqrt(vx) * F.sqrt(vy)), 4),
+    )
+
+
 @_q(
     "corr_types_daily",
     f"""
     WITH daily AS ({_SQL_DAILY}),
     p AS (
       SELECT a.event_type AS type_a, b.event_type AS type_b,
-             count(*) AS n, sum(a.s) AS sx, sum(b.s) AS sy,
-             sum(a.s * b.s) AS sxy, sum(a.s * a.s) AS sx2,
-             sum(b.s * b.s) AS sy2
+             {_SQL_SUFFICIENT}
       FROM daily a JOIN daily b
         ON a.day = b.day AND a.event_type < b.event_type
       GROUP BY 1, 2
     )
     SELECT type_a, type_b, cast(n AS bigint) AS n_days,
            cast(sx AS bigint) AS sx, cast(sy AS bigint) AS sy,
-           round(1e-9 +
-             (cast(n AS double) * sxy - cast(sx AS double) * sy)
-             / (sqrt(cast(n AS double) * sx2 - cast(sx AS double) * sx)
-                * sqrt(cast(n AS double) * sy2 - cast(sy AS double) * sy)),
-             4) AS pearson_r
+           {_SQL_PEARSON} AS pearson_r
     FROM p
-    WHERE cast(n AS double) * sx2 - cast(sx AS double) * sx > 0
-      AND cast(n AS double) * sy2 - cast(sy AS double) * sy > 0
+    WHERE {_SQL_BOTH_VARY}
     """,
 )
 def corr_types_daily(spark, sf_dir):
@@ -1969,35 +2000,18 @@ def corr_types_daily(spark, sf_dir):
         F.col("day").alias("day"),
         F.col("s").alias("ys"),
     )
-    p = (
+    p, r = _pearson(
         a.join(b, "day")
         .filter(F.col("type_a") < F.col("type_b"))
         .groupBy("type_a", "type_b")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("xs").alias("sx"),
-            F.sum("ys").alias("sy"),
-            F.sum(F.col("xs") * F.col("ys")).alias("sxy"),
-            F.sum(F.col("xs") * F.col("xs")).alias("sx2"),
-            F.sum(F.col("ys") * F.col("ys")).alias("sy2"),
-        )
     )
-    nd = F.col("n").cast("double")
-    vx = nd * F.col("sx2") - F.col("sx").cast("double") * F.col("sx")
-    vy = nd * F.col("sy2") - F.col("sy").cast("double") * F.col("sy")
-    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    return (
-        p.filter((vx > 0) & (vy > 0))
-        .select(
-            "type_a",
-            "type_b",
-            F.col("n").cast("long").alias("n_days"),
-            F.col("sx").cast("long").alias("sx"),
-            F.col("sy").cast("long").alias("sy"),
-            F.round(
-                F.lit(1e-9) + num / (F.sqrt(vx) * F.sqrt(vy)), 4
-            ).alias("pearson_r"),
-        )
+    return p.select(
+        "type_a",
+        "type_b",
+        F.col("n").cast("long").alias("n_days"),
+        F.col("sx").cast("long").alias("sx"),
+        F.col("sy").cast("long").alias("sy"),
+        r.alias("pearson_r"),
     )
 
 
@@ -2018,25 +2032,16 @@ _XCORR_MAX_LAG = 3
       SELECT unnest(generate_series(0, {_XCORR_MAX_LAG})) AS lag_days
     ),
     p AS (
-      SELECT l.lag_days, count(*) AS n, sum(a.s) AS sx, sum(b.s) AS sy,
-             sum(a.s * b.s) AS sxy, sum(a.s * a.s) AS sx2,
-             sum(b.s * b.s) AS sy2
+      SELECT l.lag_days, {_SQL_SUFFICIENT}
       FROM lags l
       JOIN a ON true
       JOIN b ON b.day = a.day + l.lag_days
       GROUP BY 1
     ),
     r AS (
-      SELECT lag_days, n,
-             round(1e-9 +
-               (cast(n AS double) * sxy - cast(sx AS double) * sy)
-               / (sqrt(cast(n AS double) * sx2 - cast(sx AS double) * sx)
-                  * sqrt(cast(n AS double) * sy2
-                         - cast(sy AS double) * sy)),
-               4) AS xcorr
+      SELECT lag_days, n, {_SQL_PEARSON} AS xcorr
       FROM p
-      WHERE cast(n AS double) * sx2 - cast(sx AS double) * sx > 0
-        AND cast(n AS double) * sy2 - cast(sy AS double) * sy > 0
+      WHERE {_SQL_BOTH_VARY}
     )
     SELECT cast(lag_days AS bigint) AS lag_days,
            cast(n AS bigint) AS n_days, xcorr,
@@ -2079,31 +2084,13 @@ def xcorr_lag_scan(spark, sf_dir):
     al = a.withColumn(
         "lag_days", F.explode(F.sequence(F.lit(0), F.lit(_XCORR_MAX_LAG)))
     ).withColumn("lag_days", F.col("lag_days").cast("long"))
-    p = (
-        al.join(b, al["day"] + al["lag_days"] == b["bday"])
-        .groupBy("lag_days")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("xs").alias("sx"),
-            F.sum("ys").alias("sy"),
-            F.sum(F.col("xs") * F.col("ys")).alias("sxy"),
-            F.sum(F.col("xs") * F.col("xs")).alias("sx2"),
-            F.sum(F.col("ys") * F.col("ys")).alias("sy2"),
-        )
+    p, xcorr = _pearson(
+        al.join(b, al["day"] + al["lag_days"] == b["bday"]).groupBy("lag_days")
     )
-    nd = F.col("n").cast("double")
-    vx = nd * F.col("sx2") - F.col("sx").cast("double") * F.col("sx")
-    vy = nd * F.col("sy2") - F.col("sy").cast("double") * F.col("sy")
-    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    r = (
-        p.filter((vx > 0) & (vy > 0))
-        .select(
-            "lag_days",
-            F.col("n").cast("long").alias("n_days"),
-            F.round(F.lit(1e-9) + num / (F.sqrt(vx) * F.sqrt(vy)), 4).alias(
-                "xcorr"
-            ),
-        )
+    r = p.select(
+        "lag_days",
+        F.col("n").cast("long").alias("n_days"),
+        xcorr.alias("xcorr"),
     )
     w = Window.orderBy(F.desc("xcorr"), "lag_days")
     return r.withColumn(

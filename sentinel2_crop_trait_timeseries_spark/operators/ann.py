@@ -1,6 +1,6 @@
 """Approximate-nearest-neighbor indexes over embedding columns.
 
-Three scale paths over ``(id, embedding array<float>)`` corpora, all
+Three scale paths over ``(vec_id, embedding array<float>)`` corpora, all
 built so the CORPUS side never shuffles — only the (small) query side
 is replicated and broadcast, and candidates meet through plain hash
 equi-joins (never BroadcastNestedLoop / cartesian):
@@ -155,14 +155,16 @@ def grouped_cell_topk(corpus_cells: DataFrame, query_cells: DataFrame,
     )
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     n_blocks: int = 64) -> DataFrame:
+# corpus hash blocks of the brute-force pair cover
+_BF_BLOCKS = 64
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame,
+                     k: int = 3) -> DataFrame:
     """Exact cosine top-k baseline over all (query, corpus) pairs.
 
     The pair space is covered by hash-blocking the corpus into
-    ``n_blocks`` cells and replicating the (small) query set to every
+    ``_BF_BLOCKS`` cells and replicating the (small) query set to every
     cell — the dedup_embedding_cosine block discipline: candidates meet
     through the cogroup's hash partitioning, each cell runs one dense
     numpy scoring kernel with a cell-local top-k, and the global window
@@ -171,13 +173,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     candidate row) was quadratic in interpreted-expression evaluations:
     130 s at sf1.0 vs ~2 s for this plan on identical output."""
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ec"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_BF_BLOCKS)).cast("int")
         .alias("cell"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
+        F.explode(F.sequence(F.lit(0), F.lit(_BF_BLOCKS - 1))).alias("cell"),
     )
     return grouped_cell_topk(c, q, k)
 
@@ -205,22 +207,21 @@ def hamming_masks(n_bits: int, radius: int) -> list[int]:
 
 
 def sign_projection_topk(corpus: DataFrame, queries: DataFrame,
-                         planes: np.ndarray, k: int = 3, radius: int = 1,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         planes: np.ndarray, k: int = 3,
+                         radius: int = 1) -> DataFrame:
     """Multi-probe sign-LSH ANN: bucket the corpus once (JVM fold —
     sign bits unchanged), explode each query over every bucket within
     ``radius`` bit flips, then score candidates inside the per-bucket
     cogroup (grouped_cell_topk): buckets are disjoint per corpus row
     and distinct per query, so every candidate meets exactly once."""
-    bucket = sign_projection_bucket(F.col(vec_col), planes)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("ec"),
+    bucket = sign_projection_bucket(F.col("embedding"), planes)
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("ec"),
                       bucket.alias("cell"))
     masks = hamming_masks(len(planes), radius)
     q = (
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qe"), bucket.alias("bucket"))
+        queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qe"), bucket.alias("bucket"))
         .select("query_id", "qe", "bucket",
                 F.explode(F.array(*[F.lit(m) for m in masks])).alias("mask"))
         .select("query_id", "qe",
@@ -243,19 +244,18 @@ def ivf_cells(vec_col, centroids: np.ndarray) -> F.Column:
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: np.ndarray,
-             k: int = 3, nprobe: int = 2, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+             k: int = 3, nprobe: int = 2) -> DataFrame:
     """IVF ANN: corpus rows live in their argmin-cost cell (JVM
     expression — cell ids unchanged); queries probe their ``nprobe``
     nearest cells; candidates are scored inside the per-cell cogroup
     (grouped_cell_topk) — one corpus row per cell, distinct probe cells
     per query, so every candidate meets exactly once."""
-    cells = ivf_cells(F.col(vec_col), centroids)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("ec"),
+    cells = ivf_cells(F.col("embedding"), centroids)
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("ec"),
                       F.element_at(cells, 1)["c"].alias("cell"))
     probes = F.array(*[F.element_at(cells, i + 1)["c"] for i in range(nprobe)])
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qe"),
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qe"),
                        F.explode(probes).alias("cell"))
     return grouped_cell_topk(c, q, k)

@@ -79,7 +79,6 @@ def encode_sequences(obs: DataFrame) -> DataFrame:
             )
         ).alias("pts")
     )
-    idx = F.transform(F.col("pts"), lambda _, i: i)
     toks = F.flatten(
         F.transform(
             F.col("pts"),
@@ -91,7 +90,6 @@ def encode_sequences(obs: DataFrame) -> DataFrame:
             ),
         )
     )
-    _ = idx
     return agg.select(
         "source",
         "doc_id",

@@ -159,13 +159,11 @@ def _knockout_mask(key_hash: np.ndarray, doc_of_obs: np.ndarray,
     )
     r = splitmix64(key_hash[doc_of_obs] ^ splitmix64(idx_in_doc.astype(np.uint64)))
     n_drop = (n_obs * frac).astype(np.int64)
-    keep = np.ones(len(doc_of_obs), dtype=bool)
     # rank within doc: argsort r within segments (docs are contiguous)
     order = np.lexsort((r, doc_of_obs))
     rank = np.empty_like(idx_in_doc)
     rank[order] = idx_in_doc  # 0..n-1 within doc in r-order
-    keep = rank >= n_drop[doc_of_obs]
-    return keep
+    return rank >= n_drop[doc_of_obs]
 
 
 # Peak bytes for the padded (segment x gap-width) cumsum matrix. Above

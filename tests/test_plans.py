@@ -66,12 +66,6 @@ def test_asof_join_has_no_join_operator(spark):
     assert plan.count("Exchange") == 1  # single keyed shuffle
 
 
-def test_rollups_aggregate_map_side(spark):
-    for name in ("rollup_hourly", "rollup_daily_cascade", "continuous_agg_daily"):
-        plan = _executed(spark, name)
-        assert "partial_" in plan, name
-
-
 def _plan_nodes(plan):
     """Every node of an executed physical plan, through the adaptive
     wrapper and its query stages."""
@@ -89,6 +83,42 @@ def _plan_nodes(plan):
         kids = p.children()
         todo.extend(kids.apply(i) for i in range(kids.size()))
     return nodes
+
+
+def _unwrap(node):
+    """The operator under any codegen wrappers."""
+    while node.nodeName().startswith(("WholeStageCodegen", "InputAdapter")):
+        node = node.children().apply(0)
+    return node
+
+
+def _is_partial_agg(node):
+    if not node.nodeName().endswith("Aggregate"):
+        return False
+    aggs = node.aggregateExpressions()
+    modes = {aggs.apply(i).mode().toString() for i in range(aggs.size())}
+    return modes == {"Partial"}
+
+
+def test_rollups_aggregate_map_side(spark):
+    """Every shuffle of a tier rollup carries map-side partial
+    aggregates, never raw rows: each Exchange of the executed plan sits
+    directly on a partial-mode aggregate (a cascade shuffles once per
+    tier)."""
+    for name, n_shuffles in (
+        ("rollup_hourly", 1),
+        ("rollup_daily_cascade", 2),
+        ("rollup_weekly_cascade", 2),
+        ("continuous_agg_daily", 1),
+    ):
+        df = QUERIES[name]["fn"](spark, SF)
+        df.collect()
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
+        assert len(exchanges) == n_shuffles, (name, [n.nodeName() for n in nodes])
+        for ex in exchanges:
+            child = _unwrap(ex.child())
+            assert _is_partial_agg(child), (name, child.toString())
 
 
 def test_fused_tiers_shuffle_free(spark):

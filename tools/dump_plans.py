@@ -65,13 +65,15 @@ def main() -> None:
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(mode)
-            # strip the per-run temp ids so the artifact diffs cleanly
+            # strip the per-run ids (expression ids, exchange plan ids,
+            # the session-wide lambda variable counter, temp paths) so
+            # two dumps of the same code diff cleanly
             plan = re.sub(r"#\d+L?", "#x", plan)
+            plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
+            plan = re.sub(r"(lambda \w+?)_\d+#x", r"\1#x", plan)
             plan = re.sub(r"/tmp/\S+", "/tmp/...", plan)
-            f.write(
-                f"\n{'=' * 72}\n## {name}"
-                f" (built in {time.perf_counter() - t0:.1f}s)\n{plan}\n"
-            )
+            f.write(f"\n{'=' * 72}\n## {name}\n{plan}\n")
+            print(f"{name}: built in {time.perf_counter() - t0:.1f}s")
             n_done += 1
     print(f"wrote {out_path}: {n_done} plans, {n_skip} streaming skipped")
 
